@@ -722,6 +722,9 @@ class IndexWriter:
 class IndexReader:
     """Query-side access: pruned posting reads + corpus stats."""
 
+    # entries in the per-snapshot term cache before it is cleared
+    TERM_CACHE_MAX = 65536
+
     def __init__(self, spark: SparkSession, root: str):
         self.spark = spark
         self.root = root
@@ -775,14 +778,17 @@ class IndexReader:
         constructed before an in-place rebuild kept serving the OLD
         n_docs/avgdl/field against freshly re-read dictionary/postings
         parquet — mixed-snapshot BM25 scores (round-4 ADVICE). The
-        parquet sides need no action: dictionary()/postings reads are
-        path-based and re-planned per query."""
+        reload also drops the memoized dictionary/postings relations
+        and the term cache; dictionary(), postings_df() and
+        lookup_terms() call this first, so they never serve a file
+        listing or df from an older snapshot."""
         current = self._manifest_mtime_ns()
         if current != self._snapshot_mtime_ns:
             self._load_snapshot()
         return self._snapshot_mtime_ns
 
     def dictionary(self) -> DataFrame:
+        self.refresh_if_changed()
         if "dictionary" not in self._df_cache:
             self._df_cache["dictionary"] = self.spark.read.parquet(
                 os.path.join(self.root, "dictionary")
@@ -790,6 +796,7 @@ class IndexReader:
         return self._df_cache["dictionary"]
 
     def postings_df(self) -> DataFrame:
+        self.refresh_if_changed()
         if "postings" not in self._df_cache:
             self._df_cache["postings"] = self.spark.read.parquet(
                 os.path.join(self.root, "postings")
@@ -815,10 +822,12 @@ class IndexReader:
         dictionary scan."""
         from .hashing import term_bucket
 
+        self.refresh_if_changed()
         uniq = sorted(set(terms))
-        missing = [t for t in uniq if t not in self._term_cache]
+        got = {t: self._term_cache[t] for t in uniq if t in self._term_cache}
+        missing = [t for t in uniq if t not in got]
         if missing:
-            if len(self._term_cache) > 65536:
+            if len(self._term_cache) > self.TERM_CACHE_MAX:
                 self._term_cache.clear()  # bounded driver memory
             buckets = sorted({term_bucket(t, self.n_buckets) for t in missing})
             rows = (
@@ -837,8 +846,8 @@ class IndexReader:
                 for r in rows
             }
             for t in missing:
-                self._term_cache[t] = found.get(t)
-        return {t: self._term_cache[t] for t in uniq if self._term_cache[t] is not None}
+                got[t] = self._term_cache[t] = found.get(t)
+        return {t: got[t] for t in uniq if got[t] is not None}
 
     def postings_blocks(
         self, terms: list[str], columns: list[str] | None = None

@@ -92,7 +92,7 @@ def rows_to_local_df(spark: SparkSession, rows: list) -> DataFrame:
             "SELECT CAST(NULL AS LONG) AS doc_id, "
             "CAST(NULL AS DOUBLE) AS score WHERE 1=0"
         )
-    values = ", ".join(f"({int(d)}L, CAST({s!r} AS DOUBLE))" for d, s in rows)
+    values = ", ".join(f"({int(d)}L, CAST({float(s)!r} AS DOUBLE))" for d, s in rows)
     return spark.sql(
         f"SELECT col1 AS doc_id, col2 AS score FROM VALUES {values}"
     )

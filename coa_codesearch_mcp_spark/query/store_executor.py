@@ -1,10 +1,20 @@
-"""Distributed search over the materialized index: scatter-gather
-block-max WAND.
+"""Search over the materialized index: block-max WAND and phrase
+matching per doc range, on the driver or as a Spark scatter-gather.
 
-Flow per query (SURVEY §3.1 step 9c — the executor-side scatter):
+Flow per query (SURVEY §3.1 step 9c):
 
-  dictionary lookup (tiny, collected)            [driver]
+  dictionary lookup (tiny, collected; cached)    [driver]
   postings blocks: bucket-pruned + term-pruned   [parquet scan]
+
+then one of two executors, chosen by the query's candidate postings
+(the summed dictionary df of its terms and NOT-terms):
+
+  <= LOCAL_MAX_POSTINGS (2^16), query/local.py — the driver executor:
+  blocks toPandas()                              [one Spark job]
+  per-range WAND / phrase loop over range_id     [driver]
+  round(score, 4) over a VALUES relation; top-k  [driver, zero jobs]
+
+  above it — the scatter:
   repartition by range_id                        [narrow shuffle of the
                                                   candidate block set —
                                                   proportional to query
@@ -12,6 +22,19 @@ Flow per query (SURVEY §3.1 step 9c — the executor-side scatter):
                                                   whole index]
   applyInPandas(WAND per doc range) -> local k   [executors]
   global top-k merge                             [TakeOrderedAndProject]
+
+Both run the same per-range scorer (per_range / phrase_candidates), so
+they return identical rows. The constant comes from a measured
+crossover on the skewed corpus of tools/wand_skew_bench.py
+(tools/local_crossover_bench.py, BENCH/local_crossover.json): at 2^16
+postings the driver path is 1.5x (OR) to 3x (phrase) faster than the
+scatter on 4 cores, and the two meet near 3*10^5. A small scatter is
+almost all fixed job and Python-worker cost, while the driver loop
+costs 0.4-0.5 ms per 128-posting WAND block and 1.3-1.9 ms per phrase
+block. The driver path skips the OR bootstrap pre-pass (one pass over
+all ranges needs no seed). Full clause relations (``_ALL``) take the
+scatter: their rows would come back as VALUES text as long as the
+match set.
 
 Salted hot terms need no special handling at read: a (term, range)
 pair lives in exactly one salt sub-list, so grouping by range_id
@@ -26,6 +49,7 @@ from pyspark.sql import functions as F
 
 from ..index.store import IndexReader
 from .bm25 import idf_py
+from .local import phrase_scores, runs_local, score_ranges, top_k
 from .wand import BOOTSTRAP_DF_RATIO, BOOTSTRAP_MIN_DF_FACTOR, wand_topk
 
 _RESULT_SCHEMA = "doc_id long, score double"
@@ -77,15 +101,13 @@ class StoreSearcher:
         idfs = {t: info[t]["idf"] for t in present}
         exclude_set = set(exclude)
         avgdl = self.reader.avgdl
-        kk = k
-        theta0 = self._bootstrap_theta(blocks, info, present, k, mode, exclude)
         # For AND, every query term must appear in the doc range, not
         # merely in the corpus: a range holding only `alpha` blocks must
         # answer AND(alpha, beta) with nothing, so the required count is
         # closed over here and enforced inside wand_topk (n_required).
         n_required = len(present) if mode == "and" else None
 
-        def per_range(pdf: pd.DataFrame) -> pd.DataFrame:
+        def per_range(pdf: pd.DataFrame, theta0: float) -> list[tuple[int, float]]:
             term_blocks: dict[str, tuple[float, list[dict]]] = {}
             banned: set[int] = set()
             for term, grp in pdf.groupby("term", sort=True):
@@ -102,21 +124,29 @@ class StoreSearcher:
             # and the threshold tightens as if the banned docs did not
             # exist (the previous k+len(banned) over-fetch weakened
             # pruning proportionally to the excluded doc count)
-            hits = wand_topk(
+            return wand_topk(
                 term_blocks,
                 avgdl,
-                kk,
+                k,
                 mode=mode,
                 threshold0=theta0,
                 n_required=n_required,
                 banned=banned.__contains__ if banned else None,
             )
-            return pd.DataFrame(hits, columns=["doc_id", "score"])
 
+        if runs_local(sum(v["df"] for v in info.values()), k):
+            hits = score_ranges(blocks, lambda pdf: per_range(pdf, 0.0))
+            return top_k(self.reader.spark, hits, k)
+        theta0 = self._bootstrap_theta(blocks, info, present, k, mode, exclude)
         local = (
             blocks.repartition("range_id")
             .groupBy("range_id")
-            .applyInPandas(lambda key, pdf: per_range(pdf), _RESULT_SCHEMA)
+            .applyInPandas(
+                lambda key, pdf: pd.DataFrame(
+                    per_range(pdf, theta0), columns=["doc_id", "score"]
+                ),
+                _RESULT_SCHEMA,
+            )
         )
         return (
             local.select("doc_id", F.round("score", 4).alias("score"))
@@ -228,6 +258,15 @@ class StoreSearcher:
 
         from .phrase import CAND_SCHEMA, phrase_candidates
 
+        if runs_local(sum(v["df"] for v in info.values()), k):
+            cands = score_ranges(
+                blocks,
+                lambda pdf: phrase_candidates(pdf, seq, max_span).itertuples(
+                    index=False, name=None
+                ),
+            )
+            hits = phrase_scores(cands, self.reader.n_docs, self.reader.avgdl)
+            return top_k(self.reader.spark, hits, k)
         cand = blocks.repartition("range_id").groupBy("range_id").applyInPandas(
             lambda key, pdf: phrase_candidates(pdf, seq, max_span),
             CAND_SCHEMA,

@@ -61,6 +61,12 @@ def get_spark(
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
     )
+    if master.startswith("local"):
+        # workers share the driver's environment here, so they can run
+        # this package's daemon (see worker_daemon.py)
+        builder = builder.config(
+            "spark.python.daemon.module", "coa_codesearch_mcp_spark.worker_daemon"
+        )
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark

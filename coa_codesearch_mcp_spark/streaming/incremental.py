@@ -71,6 +71,7 @@ store.py; production would reserve an id-mapping table).
 from __future__ import annotations
 
 import os
+from typing import NamedTuple
 
 import numpy as np
 import pandas as pd
@@ -118,6 +119,7 @@ def _score_range_segments(
     idfs: dict[str, float],
     exclude_set: set[str],
     avgdl: float,
+    seg_avgdl: dict[int, float],
     k: int,
     mode: str,
     n_required: int | None,
@@ -134,8 +136,17 @@ def _score_range_segments(
     accumulate, the next segment starts pruning at the running k-th
     best instead of zero. Excluded-term postings decode only to build
     the banned set (visible copies ban; hidden copies don't), exactly
-    as in StoreSearcher. Shared verbatim by the distributed scatter
-    (_search) and the driver-side diagnostic (wand_stats)."""
+    as in StoreSearcher. Shared verbatim by the scatter and the
+    driver-side executor (query/local.py) behind _search and
+    wand_stats.
+
+    A segment's stored block ``ub`` is the block's max tfn under that
+    segment's own avgdl (``seg_avgdl``, from its manifest), but blocks
+    are scored under the live ``avgdl``. When the live avgdl is the
+    larger, every tfn grows, by at most their ratio (the mediant
+    inequality on tfn's denominator), so the bound is scaled by
+    max(1, avgdl / seg_avgdl) to stay an upper bound — unscaled, WAND
+    could prune a delta doc that belongs in the top k."""
     from ..index.codec import decode_blocks
     from ..query.wand import wand_topk
 
@@ -144,6 +155,9 @@ def _score_range_segments(
     for seg_id in sorted(pdf["seg_id"].unique()):
         sid = int(seg_id)
         seg_pdf = pdf[pdf["seg_id"] == seg_id]
+        ub_scale = max(1.0, avgdl / seg_avgdl[sid])
+        if ub_scale > 1.0:
+            seg_pdf = seg_pdf.assign(ub=seg_pdf["ub"] * ub_scale)
         term_blocks: dict[str, tuple[float, list[dict]]] = {}
         banned_set: set[int] = set()
         for term, grp in seg_pdf.groupby("term", sort=True):
@@ -178,6 +192,29 @@ def _score_range_segments(
             theta = max(theta, kth)
     out.sort(key=lambda t: (-round(t[1], 4), t[0]))
     return out[:k]
+
+
+def _visible(tomb_map: dict[int, int]):
+    """(doc_id, seg_id) -> whether that copy is live under tombstones."""
+
+    def visible(doc_id: int, seg_id: int) -> bool:
+        upto = tomb_map.get(doc_id)
+        return upto is None or seg_id >= upto
+
+    return visible
+
+
+class _LiveQuery(NamedTuple):
+    """Driver-side plan of one live-tier query (_query_context)."""
+
+    n_docs: int
+    avgdl: float
+    idfs: dict[str, float]
+    live_df: dict[str, int]
+    seg_df: dict[tuple[str, int], int]
+    seg_avgdl: dict[int, float]
+    blocks: DataFrame
+    tombs: DataFrame
 
 
 class DeltaIndexManager:
@@ -330,14 +367,16 @@ class DeltaIndexManager:
         and resolve last-writer-wins inside the scatter
         (_tomb_map_lww) — same winner as tombstones(), one less
         shuffle per query."""
-        path = self._tombstone_path()
-        committed = self._delta_ids()
-        schema = "doc_id long, upto_seg long, issued_delta long"
-        if not committed or not os.path.exists(path):
-            return self.spark.createDataFrame([], schema)
-        return self._snapshot_df("tombstones", path).filter(
-            F.col("issued_delta").isin(committed)
+        if not self._has_tombstones():
+            return self.spark.createDataFrame(
+                [], "doc_id long, upto_seg long, issued_delta long"
+            )
+        return self._snapshot_df("tombstones", self._tombstone_path()).filter(
+            F.col("issued_delta").isin(self._delta_ids())
         ).select("doc_id", "upto_seg", "issued_delta")
+
+    def _has_tombstones(self) -> bool:
+        return bool(self._delta_ids()) and os.path.exists(self._tombstone_path())
 
     def _reader_for(self, root: str) -> IndexReader:
         """Segment readers are cached per root and refreshed by
@@ -870,9 +909,10 @@ class DeltaIndexManager:
     def _query_context(
         self, terms: list[str], exclude: list[str],
         columns: list[str] | None = None,
-    ) -> tuple | None:
-        """Shared driver-side planning for the live-tier scatter:
-        (n_docs, avgdl, idfs, n_required?, tagged blocks DF, tomb DF).
+    ) -> _LiveQuery | None:
+        """Shared driver-side planning for both live-tier executors:
+        corpus stats, idfs, per-segment df and avgdl, the tagged
+        blocks DF and the range-keyed raw tombstone DF (_LiveQuery).
 
         ``columns``: optional posting-column projection (store.py
         WAND_BLOCK_COLUMNS / PHRASE_BLOCK_COLUMNS) applied per segment
@@ -981,19 +1021,26 @@ class DeltaIndexManager:
             "range_id",
             F.expr(f"CAST(doc_id DIV {self.cfg.range_size} AS LONG)"),
         )
-        return n_docs, avgdl, idfs, live_df, seg_df, all_blocks, tomb_by_range
+        return _LiveQuery(
+            n_docs, avgdl, idfs, live_df, seg_df,
+            {seg_id: r.avgdl for seg_id, r in segs}, all_blocks, tomb_by_range,
+        )
 
+    def _score_local(self, ctx: _LiveQuery, per_range) -> list[tuple]:
+        """The driver-side executor (query/local.py) over the live
+        blocks: ``per_range(range_pdf, tomb_map)`` per range_id, with
+        the committed tombstones read and resolved once. Tombstone rows
+        are bounded by the churn between compactions (maybe_compact)."""
+        from ..query.local import score_ranges
+
+        tomb_map: dict[int, int] = {}
+        if self._has_tombstones():
+            t = self._tombstones_raw().toPandas()
+            tomb_map = _tomb_map_lww(t["doc_id"], t["upto_seg"], t["issued_delta"])
+        return score_ranges(ctx.blocks, lambda pdf: per_range(pdf, tomb_map))
 
     def _bootstrap_theta_live(
-        self,
-        live_df: dict[str, int],
-        idfs: dict[str, float],
-        all_blocks,
-        tomb_by_range,
-        avgdl: float,
-        k: int,
-        mode: str,
-        exclude: list[str],
+        self, ctx: _LiveQuery, k: int, mode: str, exclude: list[str]
     ) -> float:
         """Global threshold bootstrap for the LIVE tier's scatter —
         the store path's round-3 win, applicable now that the live
@@ -1007,9 +1054,10 @@ class DeltaIndexManager:
         the safety argument hold across segments. Gated exactly like
         StoreSearcher._bootstrap_theta (OR, no NOT-exclusions,
         rare df >= 4k, df skew >= 8x)."""
+        idfs = ctx.idfs
         if mode != "or" or exclude or len(idfs) < 2:
             return 0.0
-        dfs = {t: live_df[t] for t in idfs}
+        dfs = {t: ctx.live_df[t] for t in idfs}
         rare = min(dfs, key=lambda t: dfs[t])
         from ..query.wand import (
             BOOTSTRAP_DF_RATIO,
@@ -1022,20 +1070,21 @@ class DeltaIndexManager:
         ):
             return 0.0
         rare_idfs = {rare: idfs[rare]}
+        avgdl, seg_avgdl = ctx.avgdl, ctx.seg_avgdl
 
         def per_range(pdf: pd.DataFrame, tomb_pdf: pd.DataFrame) -> pd.DataFrame:
             tomb_map = _tomb_map_lww(
                 tomb_pdf["doc_id"], tomb_pdf["upto_seg"], tomb_pdf["issued_delta"]
             )
             hits = _score_range_segments(
-                pdf, tomb_map, rare_idfs, set(), avgdl, k, "or", None
+                pdf, tomb_map, rare_idfs, set(), avgdl, seg_avgdl, k, "or", None
             )
             return pd.DataFrame(hits, columns=["doc_id", "score"])
 
         scores = (
-            all_blocks.filter(F.col("term") == rare)
+            ctx.blocks.filter(F.col("term") == rare)
             .groupby("range_id")
-            .cogroup(tomb_by_range.groupby("range_id"))
+            .cogroup(ctx.tombs.groupby("range_id"))
             .applyInPandas(
                 lambda left, right: per_range(left, right),
                 "doc_id long, score double",
@@ -1047,6 +1096,31 @@ class DeltaIndexManager:
         if len(scores) < k:
             return 0.0
         return float(scores[-1]["score"])
+
+    def _wand_query(
+        self, terms: list[str], mode: str, exclude: list[str]
+    ) -> tuple[_LiveQuery, object] | None:
+        """(plan, scorer) for a term/OR/AND/NOT query, or None when it
+        can match nothing. ``scorer(pdf, tomb_map, k, theta0, stats)``
+        is the per-range WAND both executors run."""
+        from ..index.store import WAND_BLOCK_COLUMNS
+
+        ctx = self._query_context(terms, exclude, columns=WAND_BLOCK_COLUMNS)
+        if ctx is None or not ctx.idfs or (mode == "and" and len(ctx.idfs) < len(terms)):
+            return None
+        n_required = len(terms) if mode == "and" else None
+        exclude_set = set(exclude)
+        # plain values only: the scatter pickles this closure, and ctx
+        # holds DataFrames
+        idfs, avgdl, seg_avgdl = ctx.idfs, ctx.avgdl, ctx.seg_avgdl
+
+        def scorer(pdf, tomb_map, k, theta0=0.0, stats=None):
+            return _score_range_segments(
+                pdf, tomb_map, idfs, exclude_set, avgdl, seg_avgdl,
+                k, mode, n_required, stats=stats, threshold0=theta0,
+            )
+
+        return ctx, scorer
 
     def _search(
         self,
@@ -1065,37 +1139,41 @@ class DeltaIndexManager:
         Correct because every live doc has exactly ONE visible copy
         (apply_batch tombstones all prior copies of an upserted url):
         a doc's entire score comes from the segment holding that copy,
-        so per-(range, segment) local top-k merge exactly."""
-        from ..index.store import WAND_BLOCK_COLUMNS
+        so per-(range, segment) local top-k merge exactly.
+
+        Two executors run that scorer. When the candidate postings (the
+        per-segment dictionary df summed over terms and NOT-terms) are
+        at most query/local.py's LOCAL_MAX_POSTINGS (2^16, from the
+        measured crossover in BENCH/local_crossover.json), the blocks
+        and raw tombstones are scanned to the driver and scored there
+        in a loop over range_id, without the OR bootstrap: the
+        dictionary job plus two scans, instead of a cogrouped
+        applyInPandas scatter. Larger queries take the scatter, seeded
+        by the OR bootstrap pre-pass."""
+        from ..query.local import runs_local, top_k
 
         terms = sorted(set(terms))
         exclude = sorted(set(exclude or []))
-        ctx = self._query_context(terms, exclude, columns=WAND_BLOCK_COLUMNS)
-        if ctx is None:
-            return self.spark.createDataFrame([], "doc_id long, score double")
-        n_docs, avgdl, idfs, live_df, _seg_df, all_blocks, tomb_by_range = ctx
-        if not idfs or (mode == "and" and len(idfs) < len(terms)):
-            return self.spark.createDataFrame([], "doc_id long, score double")
-        kk = k
-        n_required = len(terms) if mode == "and" else None
-        exclude_set = set(exclude)
-        theta0 = self._bootstrap_theta_live(
-            live_df, idfs, all_blocks, tomb_by_range, avgdl, k, mode, exclude
-        )
+        q = self._wand_query(terms, mode, exclude)
+        if q is None:
+            return self._empty_hits()
+        ctx, scorer = q
+        if runs_local(sum(ctx.seg_df.values()), k):
+            hits = self._score_local(ctx, lambda pdf, tm: scorer(pdf, tm, k))
+            return top_k(self.spark, hits, k)
+        theta0 = self._bootstrap_theta_live(ctx, k, mode, exclude)
 
         def per_range(pdf: pd.DataFrame, tomb_pdf: pd.DataFrame) -> pd.DataFrame:
             tomb_map = _tomb_map_lww(
                 tomb_pdf["doc_id"], tomb_pdf["upto_seg"], tomb_pdf["issued_delta"]
             )
-            hits = _score_range_segments(
-                pdf, tomb_map, idfs, exclude_set, avgdl, kk, mode, n_required,
-                threshold0=theta0,
+            return pd.DataFrame(
+                scorer(pdf, tomb_map, k, theta0), columns=["doc_id", "score"]
             )
-            return pd.DataFrame(hits, columns=["doc_id", "score"])
 
         local = (
-            all_blocks.groupby("range_id")
-            .cogroup(tomb_by_range.groupby("range_id"))
+            ctx.blocks.groupby("range_id")
+            .cogroup(ctx.tombs.groupby("range_id"))
             .applyInPandas(
                 lambda left, right: per_range(left, right),
                 "doc_id long, score double",
@@ -1115,45 +1193,23 @@ class DeltaIndexManager:
         exclude: list[str] | None = None,
         bootstrap: bool = True,
     ):
-        """Diagnostic twin of _search: runs the SAME per-range scorer
-        (_score_range_segments) driver-side over the collected
-        candidate blocks and returns (hits, WandStats) so tests and
-        benches can assert real block skipping on the live tier."""
-        from ..index.store import WAND_BLOCK_COLUMNS
+        """(hits, WandStats) of the driver-side executor over the same
+        per-range scorer, so tests and benches can assert real block
+        skipping on the live tier. ``bootstrap`` seeds every range with
+        the scatter's OR bootstrap threshold, as a scatter would run."""
         from ..query.wand import WandStats
 
         terms = sorted(set(terms))
         exclude = sorted(set(exclude or []))
-        ctx = self._query_context(terms, exclude, columns=WAND_BLOCK_COLUMNS)
-        if ctx is None:
+        q = self._wand_query(terms, mode, exclude)
+        if q is None:
             return [], WandStats()
-        n_docs, avgdl, idfs, live_df, _seg_df, all_blocks, tomb_by_range = ctx
-        if not idfs or (mode == "and" and len(idfs) < len(terms)):
-            return [], WandStats()
-        n_required = len(terms) if mode == "and" else None
-        theta0 = (
-            self._bootstrap_theta_live(
-                live_df, idfs, all_blocks, tomb_by_range, avgdl, k, mode, exclude
-            )
-            if bootstrap
-            else 0.0
-        )
-        blocks_pdf = all_blocks.toPandas()
-        tomb_rows = self._tombstones_raw().collect()
-        tomb_map = _tomb_map_lww(
-            [r["doc_id"] for r in tomb_rows],
-            [r["upto_seg"] for r in tomb_rows],
-            [r["issued_delta"] for r in tomb_rows],
-        )
+        ctx, scorer = q
+        theta0 = self._bootstrap_theta_live(ctx, k, mode, exclude) if bootstrap else 0.0
         stats = WandStats()
-        hits: list[tuple[int, float]] = []
-        for _, range_pdf in blocks_pdf.groupby("range_id", sort=True):
-            hits.extend(
-                _score_range_segments(
-                    range_pdf, tomb_map, idfs, set(exclude), avgdl, k, mode,
-                    n_required, stats=stats, threshold0=theta0,
-                )
-            )
+        hits = self._score_local(
+            ctx, lambda pdf, tm: scorer(pdf, tm, k, theta0, stats)
+        )
         hits.sort(key=lambda t: (-round(t[1], 4), t[0]))
         return [(d, round(s, 4)) for d, s in hits[:k]], stats
 
@@ -1164,8 +1220,14 @@ class DeltaIndexManager:
         matcher as the single-index store path (query/phrase.py), with
         tombstone visibility injected per (doc, segment). Phrase df /
         N / avgdl are computed over live docs, so scores equal a fresh
-        rebuild's exactly."""
+        rebuild's exactly.
+
+        Like _search, a phrase whose candidate postings are at most
+        LOCAL_MAX_POSTINGS matches on the driver (query/local.py) and
+        scores with bm25.contrib_py over the exact candidate count;
+        larger ones run the cogrouped candidate scatter."""
         from ..query.bm25 import bm25_contrib
+        from ..query.local import phrase_scores, runs_local, top_k
         from ..query.phrase import CAND_SCHEMA, phrase_candidates
 
         if not terms:
@@ -1177,32 +1239,35 @@ class DeltaIndexManager:
         uniq = sorted(set(terms))
         ctx = self._query_context(uniq, [], columns=PHRASE_BLOCK_COLUMNS)
         if ctx is None:
-            return self.spark.createDataFrame([], "doc_id long, score double")
-        n_docs, avgdl, _idfs, _live_df, seg_df, all_blocks, tomb_by_range = ctx
+            return self._empty_hits()
         # presence = dictionary presence in ANY segment (visibility is
         # applied per candidate later; a term whose only copies are
         # hidden simply yields no candidates)
-        present = {t for (t, _s) in seg_df}
+        present = {t for (t, _s) in ctx.seg_df}
         if any(t not in present for t in uniq):
-            return self.spark.createDataFrame([], "doc_id long, score double")
+            return self._empty_hits()
 
         max_span = (len(terms) - 1) + slop
         seq = list(terms)
+
+        if runs_local(sum(ctx.seg_df.values()), k):
+            cands = self._score_local(
+                ctx,
+                lambda pdf, tm: phrase_candidates(
+                    pdf, seq, max_span, visible=_visible(tm)
+                ).itertuples(index=False, name=None),
+            )
+            return top_k(self.spark, phrase_scores(cands, ctx.n_docs, ctx.avgdl), k)
 
         def per_range(pdf: pd.DataFrame, tomb_pdf: pd.DataFrame) -> pd.DataFrame:
             tomb_map = _tomb_map_lww(
                 tomb_pdf["doc_id"], tomb_pdf["upto_seg"], tomb_pdf["issued_delta"]
             )
-
-            def visible(doc_id: int, seg_id: int) -> bool:
-                upto = tomb_map.get(doc_id)
-                return upto is None or seg_id >= upto
-
-            return phrase_candidates(pdf, seq, max_span, visible=visible)
+            return phrase_candidates(pdf, seq, max_span, visible=_visible(tomb_map))
 
         cand = (
-            all_blocks.groupby("range_id")
-            .cogroup(tomb_by_range.groupby("range_id"))
+            ctx.blocks.groupby("range_id")
+            .cogroup(ctx.tombs.groupby("range_id"))
             .applyInPandas(per_range, CAND_SCHEMA)
         )
         total = cand.agg(
@@ -1216,8 +1281,8 @@ class DeltaIndexManager:
                     F.col("phrase_tf"),
                     F.col("phrase_df"),
                     F.col("dl"),
-                    n_docs,
-                    avgdl,
+                    ctx.n_docs,
+                    ctx.avgdl,
                 ),
                 4,
             ).alias("score"),

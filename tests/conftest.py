@@ -24,3 +24,12 @@ def documents(spark):
 @pytest.fixture(scope="session")
 def documents_rows(documents):
     return [(r["doc_id"], r["text"]) for r in documents.collect()]
+
+
+@pytest.fixture()
+def scatter(monkeypatch):
+    """Force the Spark scatter: small test queries otherwise run on the
+    driver-side executor (query/local.py)."""
+    from coa_codesearch_mcp_spark.query import local
+
+    monkeypatch.setattr(local, "LOCAL_MAX_POSTINGS", -1)

@@ -201,7 +201,7 @@ def test_gate_closed_when_unprofitable(store):
     assert store._bootstrap_theta(b2, i2, ["alpha"], K, "or", []) == 0.0
 
 
-def test_bootstrapped_or_matches_logical(store, logical):
+def test_bootstrapped_or_matches_logical(store, logical, scatter):
     got = rows(store.search_or(["alpha", "zeta"], k=K))
     want = rows(logical.search_or(["alpha", "zeta"], k=K))
     assert got == want
@@ -209,7 +209,7 @@ def test_bootstrapped_or_matches_logical(store, logical):
     assert all(d % 13 == 0 for d, _ in got)
 
 
-def test_bootstrapped_or_deep_k_matches_logical(store, logical):
+def test_bootstrapped_or_deep_k_matches_logical(store, logical, scatter):
     """k deep enough that results spill past the zeta docs — the seed
     bound must not cut off the stopword-only tail wrongly."""
     got = rows(store.search_or(["alpha", "zeta"], k=20))

@@ -45,6 +45,7 @@ def main() -> None:
         IndexReader,
         IndexWriter,
     )
+    from coa_codesearch_mcp_spark.query.local import runs_local
     from coa_codesearch_mcp_spark.query.store_executor import StoreSearcher
     from coa_codesearch_mcp_spark.session import get_spark
 
@@ -180,40 +181,50 @@ FROM scored ORDER BY round(score, 4) DESC, doc_id LIMIT {limit}
 
     cases = {}
 
-    def check(name, spark_df, duck_rows):
+    def check(name, spark_df, duck_rows, terms):
         got, want = spark_rows(spark_df), dd(duck_rows)
+        # which executor answered (query/local.py): the candidate
+        # postings are the summed df of the query's terms and NOT-terms
+        n_postings = sum(v["df"] for v in searcher.reader.lookup_terms(terms).values())
         cases[name] = {
             "match": got == want,
             "k": len(want),
+            "candidate_postings": n_postings,
+            "path": "driver" if runs_local(n_postings, k) else "scatter",
             "spark_top3": got[:3],
             "duckdb_top3": want[:3],
         }
 
-    check("term_stopword", searcher.search_term(top[0], k=k), duck_bm25(lit([top[0]])))
-    check("term_selective", searcher.search_term(sel[0], k=k), duck_bm25(lit([sel[0]])))
+    check("term_stopword", searcher.search_term(top[0], k=k), duck_bm25(lit([top[0]])),
+          [top[0]])
+    check("term_selective", searcher.search_term(sel[0], k=k), duck_bm25(lit([sel[0]])),
+          [sel[0]])
     check("or_stop_x_selective", searcher.search_or([top[0], sel[0]], k=k),
-          duck_bm25(lit([top[0], sel[0]])))
+          duck_bm25(lit([top[0], sel[0]])), [top[0], sel[0]])
     check("or_stop_x_rare", searcher.search_or([top[0]] + rare, k=k),
-          duck_bm25(lit([top[0]] + rare)))
+          duck_bm25(lit([top[0]] + rare)), [top[0]] + rare)
     check("and_stop_x_selective", searcher.search_and([top[0], sel[0]], k=k),
-          duck_bm25(lit([top[0], sel[0]]), having="HAVING count(*) = 2"))
+          duck_bm25(lit([top[0], sel[0]]), having="HAVING count(*) = 2"),
+          [top[0], sel[0]])
     check("and_selective_pair", searcher.search_and(sel, k=k),
-          duck_bm25(lit(sel), having=f"HAVING count(*) = {len(set(sel))}"))
+          duck_bm25(lit(sel), having=f"HAVING count(*) = {len(set(sel))}"), sel)
     check("not_stop_minus_selective",
           searcher.search_or([top[0]], k=k, exclude=[sel[0]]),
           duck_bm25(lit([top[0]]),
                     exclude=(f"WHERE doc_id NOT IN (SELECT doc_id FROM post "
-                             f"WHERE term = '{sel[0]}')")))
+                             f"WHERE term = '{sel[0]}')")),
+          [top[0], sel[0]])
     check("phrase_adjacent", searcher.search_phrase(list(ph), k=k),
-          duck_phrase(*ph))
+          duck_phrase(*ph), list(ph))
 
     out = {
         "metric": "bm25_rank_identity_vs_independent_engine",
         "corpus": {"n_docs": n_docs, "vocab_size": vocab_size,
                    "note": "webgen web-realistic skew; identical parquet "
                            "read by both engines"},
-        "engine_pair": "store-path block-max WAND scatter (compressed "
-                       "blocks) vs DuckDB SQL BM25 from the pinned formula",
+        "engine_pair": "store-path block-max WAND (compressed blocks; "
+                       "driver executor or scatter, per case 'path') vs "
+                       "DuckDB SQL BM25 from the pinned formula",
         "k": k,
         "cases": cases,
         "all_match": all(c["match"] for c in cases.values()),
