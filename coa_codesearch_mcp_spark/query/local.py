@@ -3,8 +3,8 @@ store (query/store_executor.py) and the live tier
 (streaming/incremental.py).
 
 A query whose candidate postings -- the summed dictionary df of its
-terms and NOT-terms -- number at most LOCAL_MAX_POSTINGS skips the
-Spark scatter. One Spark scan brings its column-pruned posting blocks
+terms and NOT-terms, plus the committed tombstone rows on the live
+tier -- number at most LOCAL_MAX_POSTINGS skips the Spark scatter. One Spark scan brings its column-pruned posting blocks
 to the driver (``toPandas``), and the tier's own per-range scorer
 (wand_topk, _score_range_segments, phrase_candidates) runs unchanged
 in a loop over range_id. At that size a scatter is almost all fixed
@@ -18,9 +18,13 @@ scatter computes with threshold0 = 0, and the merged top-k is the same.
 
 Scores are rounded by Spark's own ``round(score, 4)`` (HALF_UP on the
 decimal form, which Python's ``round`` does not reproduce), projected
-over a VALUES local relation: Spark evaluates that projection on the
-driver with zero jobs, while an orderBy/limit on it launches one, so
-the final (score desc, doc_id asc) order is applied in Python.
+over an Arrow-built local relation (cache.rows_to_local_df): Spark
+evaluates that projection on the driver with zero jobs, while an
+orderBy/limit on it launches one, so the final (score desc, doc_id
+asc) order is applied in Python. The rows this path holds, returns
+included, never exceed its candidate rows, and the constant sits below
+the crossover of the deepest k (full clause relations,
+StoreSearcher._ALL), so the choice ignores k.
 """
 
 from __future__ import annotations
@@ -33,25 +37,26 @@ from pyspark.sql import functions as F
 from .bm25 import contrib_py
 from .cache import rows_to_local_df
 
-# Largest candidate-posting count scored on the driver; it also bounds
-# the posting rows this path holds in driver memory. On the 240k-doc
-# skewed corpus on 4 cores (tools/local_crossover_bench.py,
-# BENCH/local_crossover.json) the driver is 1.5x (OR) and 3x (phrase)
-# faster than the scatter here, and the two meet near 3*10^5 postings;
-# the margin leaves room for scatters over more executors.
-LOCAL_MAX_POSTINGS = 1 << 16
-# Largest k served locally: the rounding pass parses k (+ ties) rows
-# of SQL VALUES text (0.4 s at 10^3 rows, 1.4 s at 10^4, 4 cores).
-# Full clause relations (StoreSearcher._ALL) therefore take the scatter.
-LOCAL_MAX_K = 1000
+# Largest candidate-row count scored on the driver; it also bounds the
+# posting (and tombstone) rows this path holds in driver memory. On the
+# 240k-doc skewed corpus on 4 cores (tools/local_crossover_bench.py,
+# BENCH/local_crossover.json) the driver path beats the scatter here at
+# every k measured (10, 100, 1000 and full clause relations): OR by
+# 1.1-1.8x, phrase by 2.4-2.9x. At 2^15 a full-relation OR already
+# loses (1.30 s against 1.09 s): WAND prunes little there, and the
+# scatter scores on 4 workers. At k = 10 alone the two meet between
+# 10^5 and 3*10^5 postings.
+LOCAL_MAX_POSTINGS = 1 << 14
 
 # Spark's HALF_UP rounding moves a score by at most 0.5e-4, so a hit
 # more than this below the k-th best raw score can never reach the top k.
 _ROUND_SLACK = 2e-4
 
 
-def runs_local(n_postings: int, k: int) -> bool:
-    return n_postings <= LOCAL_MAX_POSTINGS and k <= LOCAL_MAX_K
+def runs_local(n_rows: int) -> bool:
+    """Whether a query holding ``n_rows`` candidate rows on the driver
+    (postings, plus tombstones on the live tier) runs here."""
+    return n_rows <= LOCAL_MAX_POSTINGS
 
 
 def score_ranges(blocks: DataFrame, per_range) -> list[tuple]:

@@ -9,10 +9,11 @@ Flow per query (SURVEY §3.1 step 9c):
 then one of two executors, chosen by the query's candidate postings
 (the summed dictionary df of its terms and NOT-terms):
 
-  <= LOCAL_MAX_POSTINGS (2^16), query/local.py — the driver executor:
+  <= LOCAL_MAX_POSTINGS (2^14), query/local.py — the driver executor:
   blocks toPandas()                              [one Spark job]
   per-range WAND / phrase loop over range_id     [driver]
-  round(score, 4) over a VALUES relation; top-k  [driver, zero jobs]
+  round(score, 4) over an Arrow local relation;  [driver, zero jobs]
+  top-k
 
   above it — the scatter:
   repartition by range_id                        [narrow shuffle of the
@@ -26,15 +27,17 @@ then one of two executors, chosen by the query's candidate postings
 Both run the same per-range scorer (per_range / phrase_candidates), so
 they return identical rows. The constant comes from a measured
 crossover on the skewed corpus of tools/wand_skew_bench.py
-(tools/local_crossover_bench.py, BENCH/local_crossover.json): at 2^16
-postings the driver path is 1.5x (OR) to 3x (phrase) faster than the
-scatter on 4 cores, and the two meet near 3*10^5. A small scatter is
+(tools/local_crossover_bench.py, BENCH/local_crossover.json): at 2^14
+postings the driver path is 1.1-1.8x (OR) and 2.4-2.9x (phrase)
+faster than the scatter on 4 cores, at k = 10, 100, 1000 and for full
+clause relations; at 2^15 the full-relation OR loses. A small scatter is
 almost all fixed job and Python-worker cost, while the driver loop
 costs 0.4-0.5 ms per 128-posting WAND block and 1.3-1.9 ms per phrase
 block. The driver path skips the OR bootstrap pre-pass (one pass over
-all ranges needs no seed). Full clause relations (``_ALL``) take the
-scatter: their rows would come back as VALUES text as long as the
-match set.
+all ranges needs no seed). The choice ignores k: the constant sits
+below the crossover of the deepest k, so full clause relations
+(``_ALL``) take the driver path too, and the driver never holds more
+rows than the constant.
 
 Salted hot terms need no special handling at read: a (term, range)
 pair lives in exactly one salt sub-list, so grouping by range_id
@@ -134,7 +137,7 @@ class StoreSearcher:
                 banned=banned.__contains__ if banned else None,
             )
 
-        if runs_local(sum(v["df"] for v in info.values()), k):
+        if runs_local(sum(v["df"] for v in info.values())):
             hits = score_ranges(blocks, lambda pdf: per_range(pdf, 0.0))
             return top_k(self.reader.spark, hits, k)
         theta0 = self._bootstrap_theta(blocks, info, present, k, mode, exclude)
@@ -258,7 +261,7 @@ class StoreSearcher:
 
         from .phrase import CAND_SCHEMA, phrase_candidates
 
-        if runs_local(sum(v["df"] for v in info.values()), k):
+        if runs_local(sum(v["df"] for v in info.values())):
             cands = score_ranges(
                 blocks,
                 lambda pdf: phrase_candidates(pdf, seq, max_span).itertuples(

@@ -215,6 +215,13 @@ class _LiveQuery(NamedTuple):
     seg_avgdl: dict[int, float]
     blocks: DataFrame
     tombs: DataFrame
+    n_tombs: int
+
+    def driver_rows(self) -> int:
+        """Rows the driver executor would hold: the candidate postings
+        (per-segment df of terms and NOT-terms) plus every committed
+        tombstone row, which it reads whole."""
+        return sum(self.seg_df.values()) + self.n_tombs
 
 
 class DeltaIndexManager:
@@ -1024,13 +1031,25 @@ class DeltaIndexManager:
         return _LiveQuery(
             n_docs, avgdl, idfs, live_df, seg_df,
             {seg_id: r.avgdl for seg_id, r in segs}, all_blocks, tomb_by_range,
+            self._tombstone_rows(),
         )
+
+    def _tombstone_rows(self) -> int:
+        """Committed tombstone rows, from the manifest alone: each batch
+        appends one row per changed url, its recorded event count. A
+        batch retried after a crash between its tombstone append and
+        its commit leaves one more copy of its rows per failed attempt
+        (value-identical, so visibility is unaffected)."""
+        units = self.manifest.stage("deltas")["units"]
+        return sum(int(units[str(d)].get("events", 0)) for d in self._delta_ids())
 
     def _score_local(self, ctx: _LiveQuery, per_range) -> list[tuple]:
         """The driver-side executor (query/local.py) over the live
         blocks: ``per_range(range_pdf, tomb_map)`` per range_id, with
-        the committed tombstones read and resolved once. Tombstone rows
-        are bounded by the churn between compactions (maybe_compact)."""
+        the committed tombstones read and resolved once. Routing counts
+        those rows (_LiveQuery.driver_rows), so a tier with many
+        tombstones sends even a small query to the scatter, which
+        cogroups each range with its own tombstone slice."""
         from ..query.local import score_ranges
 
         tomb_map: dict[int, int] = {}
@@ -1142,14 +1161,15 @@ class DeltaIndexManager:
         so per-(range, segment) local top-k merge exactly.
 
         Two executors run that scorer. When the candidate postings (the
-        per-segment dictionary df summed over terms and NOT-terms) are
-        at most query/local.py's LOCAL_MAX_POSTINGS (2^16, from the
-        measured crossover in BENCH/local_crossover.json), the blocks
-        and raw tombstones are scanned to the driver and scored there
-        in a loop over range_id, without the OR bootstrap: the
-        dictionary job plus two scans, instead of a cogrouped
-        applyInPandas scatter. Larger queries take the scatter, seeded
-        by the OR bootstrap pre-pass."""
+        per-segment dictionary df summed over terms and NOT-terms) plus
+        the committed tombstone rows are at most query/local.py's
+        LOCAL_MAX_POSTINGS (2^14, from the measured crossover in
+        BENCH/local_crossover.json), the blocks and raw tombstones are
+        scanned to the driver and scored there in a loop over range_id,
+        without the OR bootstrap: the dictionary job plus two scans,
+        instead of a cogrouped applyInPandas scatter. Larger queries,
+        and any query over a tier with more tombstone rows than that,
+        take the scatter, seeded by the OR bootstrap pre-pass."""
         from ..query.local import runs_local, top_k
 
         terms = sorted(set(terms))
@@ -1158,7 +1178,7 @@ class DeltaIndexManager:
         if q is None:
             return self._empty_hits()
         ctx, scorer = q
-        if runs_local(sum(ctx.seg_df.values()), k):
+        if runs_local(ctx.driver_rows()):
             hits = self._score_local(ctx, lambda pdf, tm: scorer(pdf, tm, k))
             return top_k(self.spark, hits, k)
         theta0 = self._bootstrap_theta_live(ctx, k, mode, exclude)
@@ -1222,10 +1242,11 @@ class DeltaIndexManager:
         N / avgdl are computed over live docs, so scores equal a fresh
         rebuild's exactly.
 
-        Like _search, a phrase whose candidate postings are at most
-        LOCAL_MAX_POSTINGS matches on the driver (query/local.py) and
-        scores with bm25.contrib_py over the exact candidate count;
-        larger ones run the cogrouped candidate scatter."""
+        Like _search, a phrase whose candidate postings plus committed
+        tombstone rows are at most LOCAL_MAX_POSTINGS matches on the
+        driver (query/local.py) and scores with bm25.contrib_py over the
+        exact candidate count; larger ones run the cogrouped candidate
+        scatter."""
         from ..query.bm25 import bm25_contrib
         from ..query.local import phrase_scores, runs_local, top_k
         from ..query.phrase import CAND_SCHEMA, phrase_candidates
@@ -1250,7 +1271,7 @@ class DeltaIndexManager:
         max_span = (len(terms) - 1) + slop
         seq = list(terms)
 
-        if runs_local(sum(ctx.seg_df.values()), k):
+        if runs_local(ctx.driver_rows()):
             cands = self._score_local(
                 ctx,
                 lambda pdf, tm: phrase_candidates(

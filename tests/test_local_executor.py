@@ -4,6 +4,7 @@ one Spark job per warm store query, and the reader/live-tier defects
 that path runs through."""
 
 import datetime
+import time
 
 import pytest
 from pyspark.sql import functions as F
@@ -116,10 +117,77 @@ def test_live_executors_agree(monkeypatch, live, name, run):
     assert got == want, name
 
 
+# k does not pick the executor: the driver path's rows never exceed the
+# candidate postings. Deep k rounds and returns every tied hit (all 900
+# docs hold `common`), and the full clause relation takes the driver too.
+DEEP = [
+    ("or_k1000", lambda s: s.search_or(["common", "gamma"], k=1000)),
+    ("phrase_k1000", lambda s: s.search_phrase(["alpha", "beta"], k=1000)),
+]
+
+
+@pytest.mark.parametrize("name,run", DEEP, ids=[q[0] for q in DEEP])
+def test_deep_k_executors_agree(monkeypatch, store, live, name, run):
+    for tier in (store, live):
+        got, want = _both(monkeypatch, lambda: run(tier))
+        assert len(want) > 10, name
+        assert got == want, name
+
+
+def test_store_full_clause_relation_executors_agree(monkeypatch, store):
+    run = lambda: store._wand_search(["common"], StoreSearcher._ALL, "or")  # noqa: E731
+    got, want = _both(monkeypatch, run)
+    assert len(want) == N_DOCS
+    assert got == want
+
+
+LIVE_ROUTED = [
+    ("or", lambda s: s.search_or(["gamma"], k=10)),
+    ("phrase", lambda s: s.search_phrase(["alpha", "beta"], k=10)),
+]
+
+
+@pytest.mark.parametrize("name,run", LIVE_ROUTED, ids=[q[0] for q in LIVE_ROUTED])
+def test_tombstone_rows_count_toward_live_routing(monkeypatch, live, name, run):
+    """The live driver path reads every committed tombstone row, so
+    those rows count toward LOCAL_MAX_POSTINGS: a query whose postings
+    alone fit takes the scatter once postings + tombstones do not."""
+    ctx = live._query_context(["alpha", "beta", "gamma"], [])
+    assert ctx.n_tombs == live._tombstones_raw().count() == 4
+    uniq = {"or": ["gamma"], "phrase": ["alpha", "beta"]}[name]
+    postings = sum(df for (t, _s), df in ctx.seg_df.items() if t in uniq)
+    calls = []
+    real = DeltaIndexManager._score_local
+
+    def spy(self, *args):
+        calls.append(name)
+        return real(self, *args)
+
+    monkeypatch.setattr(DeltaIndexManager, "_score_local", spy)
+    monkeypatch.setattr(local, "LOCAL_MAX_POSTINGS", postings + ctx.n_tombs - 1)
+    scattered = _rows(run(live))
+    assert calls == []
+    monkeypatch.setattr(local, "LOCAL_MAX_POSTINGS", postings + ctx.n_tombs)
+    assert _rows(run(live)) == scattered
+    assert calls == [name]
+
+
 def test_store_bool_and_not_executors_agree(monkeypatch, store):
     q = BoolQ(must=[TermQ("common"), TermQ("gamma")], must_not=[TermQ("delta")])
     got, want = _both(monkeypatch, lambda: store.execute(q, k=10))
     assert want and got == want
+
+
+def _jobs(spark, run):
+    """(rows, Spark job ids) of one collected query."""
+    sc = spark.sparkContext
+    group = f"local_probe_{time.monotonic_ns()}"
+    sc.setJobGroup(group, "driver-path store query")
+    try:
+        rows = _rows(run())
+    finally:
+        sc.setJobGroup(None, None)
+    return rows, list(sc.statusTracker().getJobIdsForGroup(group))
 
 
 def test_store_local_query_launches_one_job(spark, store):
@@ -127,14 +195,19 @@ def test_store_local_query_launches_one_job(spark, store):
     term cache already holds the dictionary rows, and the rounding and
     the top-k run over local relations."""
     store.search_or(["common", "gamma"], k=10).collect()  # warm term cache
-    sc = spark.sparkContext
-    sc.setJobGroup("local_probe", "driver-path store query")
-    try:
-        rows = _rows(store.search_or(["common", "gamma"], k=10))
-    finally:
-        sc.setJobGroup(None, None)
+    rows, jobs = _jobs(spark, lambda: store.search_or(["common", "gamma"], k=10))
     assert len(rows) == 10
-    jobs = sc.statusTracker().getJobIdsForGroup("local_probe")
+    assert len(jobs) == 1, jobs
+
+
+def test_store_local_empty_result_launches_one_job(spark, store):
+    """A phrase whose terms never meet ("delta" ends its docs) returns
+    no rows, still from the block scan alone: an empty pandas frame
+    would become an RDD scan, so no rows is a SQL relation."""
+    phrase = lambda: store.search_phrase(["delta", "alpha"], k=10)  # noqa: E731
+    phrase().collect()  # warm term cache
+    rows, jobs = _jobs(spark, phrase)
+    assert rows == []
     assert len(jobs) == 1, jobs
 
 
@@ -160,8 +233,6 @@ def test_reader_follows_in_place_rebuild(spark, tmp_path):
     """A StoreSearcher whose reader never called snapshot_token() must
     still read the rebuilt index: the memoized dictionary/postings
     relations pin the old parquet file listing otherwise."""
-    import time
-
     from coa_codesearch_mcp_spark.functions.tools_ops import clear_index
 
     root = str(tmp_path / "ix_rebuild")

@@ -77,7 +77,7 @@ def test_second_identical_search_launches_zero_jobs(spark, cached_engine):
     sc.setJobGroup("cache_probe", "second identical search")
     try:
         second = cached_engine.search("fast key", k=5)
-        got = _rows(second)  # collect of a VALUES local relation: no job
+        got = _rows(second)  # collect of a local relation: no job
     finally:
         sc.setJobGroup(None, None)
     assert second.from_cache

@@ -6,9 +6,12 @@ driver; larger ones run the applyInPandas scatter. This tool times
 both executors on the same queries over the skewed web corpus of
 ``tools/wand_skew_bench.py`` (webgen extended vocabulary, Zipf 1.3,
 log-normal doc lengths, same IndexConfig), for candidate-posting
-counts from 10^3 to 10^6, on an OR shape and a two-term phrase shape.
-The executor is forced by setting the constant, and each point checks
-that both executors return identical rows.
+counts from 10^3 to 10^6, on an OR shape and a two-term phrase shape,
+at k = 10. Up to 65 536 postings it repeats both shapes at k = 100,
+1000 and "all" (StoreSearcher._ALL, the full clause relation of
+execute()): WAND prunes less as k grows, and the driver scores on one
+core where the scatter uses every worker. The executor is forced by setting the constant, and each point checks that
+both executors return identical rows.
 
 Reps alternate driver/scatter after one warm-up of each (the warm-up
 also fills the reader's term cache); the reported figure is the median
@@ -28,7 +31,8 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-TARGETS = [1_000, 3_000, 10_000, 30_000, 65_536, 100_000, 300_000, 1_000_000]
+TARGETS = [1_000, 3_000, 10_000, 16_384, 32_768, 65_536, 100_000, 300_000, 1_000_000]
+K_SWEEP_TARGETS = [1_000, 10_000, 16_384, 32_768, 65_536]
 
 
 def pick_terms(dfs: list[tuple[str, int]], target: int, max_terms: int) -> list[str]:
@@ -62,7 +66,6 @@ def main() -> None:
     from coa_codesearch_mcp_spark.query.store_executor import StoreSearcher
     from coa_codesearch_mcp_spark.session import get_spark
 
-    default_limit = local.LOCAL_MAX_POSTINGS
     spark = get_spark("local_crossover")
     spark.sparkContext.setLogLevel("ERROR")
     sc = spark.sparkContext
@@ -111,9 +114,16 @@ def main() -> None:
         ms = (time.perf_counter() - t0) * 1000
         return rows, ms, len(sc.statusTracker().getJobIdsForGroup(group))
 
-    def point(shape, terms, run):
+    def point(shape, terms, k):
+        if shape == "or":
+            run = lambda: searcher._wand_search(terms, k, "or")  # noqa: E731
+        else:
+            run = lambda: searcher.search_phrase(terms, k=k)  # noqa: E731
         n_postings = sum(df for t, df in dfs if t in set(terms))
-        out = {"shape": shape, "terms": terms, "candidate_postings": n_postings}
+        out = {
+            "shape": shape, "k": "all" if k == searcher._ALL else k,
+            "terms": terms, "candidate_postings": n_postings,
+        }
         times = {"driver": [], "scatter": []}
         rows_seen = {}
         for rep in range(reps + 1):
@@ -126,44 +136,47 @@ def main() -> None:
         for name, ts in times.items():
             out[f"{name}_ms"] = ts
             out[f"{name}_median_ms"] = statistics.median(ts)
+        out["rows"] = len(rows_seen["driver"])
         out["rows_identical"] = rows_seen["driver"] == rows_seen["scatter"]
         out["driver_faster"] = out["driver_median_ms"] < out["scatter_median_ms"]
         print(json.dumps(out), file=sys.stderr, flush=True)
         return out
 
-    points = []
-    for target in TARGETS:
+    def shapes(target):
+        out = []
         terms = pick_terms(dfs, target, 8)
         if terms:
-            points.append(point("or", terms, lambda t=terms: searcher.search_or(t, k=10)))
+            out.append(("or", terms))
         # two distinct terms of about target/2 each
         first = pick_terms(dfs, target // 2, 1)
         rest = [x for x in dfs if x[0] not in first]
         pair = first + pick_terms(rest, target - sum(d for t, d in dfs if t in first), 1)
         if len(pair) == 2:
-            points.append(
-                point("phrase", pair, lambda t=pair: searcher.search_phrase(t, k=10))
-            )
+            out.append(("phrase", pair))
+        return out
 
+    points = []
+    for target in TARGETS:
+        for shape, terms in shapes(target):
+            points.append(point(shape, terms, 10))
+    for k in (100, 1000, searcher._ALL):
+        for target in K_SWEEP_TARGETS:
+            for shape, terms in shapes(target):
+                points.append(point(shape, terms, k))
+
+    master = sc.master
     spark.stop()
     print(
         json.dumps(
             {
                 "metric": "driver_vs_scatter_query_wall_ms",
                 "corpus": {"n_docs": n_docs, "vocab_size": vocab_size},
-                "hardware": {"nproc": os.cpu_count(), "master": spark_master()},
+                "hardware": {"nproc": os.cpu_count(), "master": master},
                 "reps": reps,
-                "k": 10,
-                "local_max_postings": default_limit,
                 "points": points,
             }
         )
     )
-
-
-def spark_master() -> str:
-    cpus = os.environ.get("SPARK_GRAFT_CPUS")
-    return f"local[{cpus}]" if cpus else "local[*]"
 
 
 if __name__ == "__main__":

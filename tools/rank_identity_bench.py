@@ -190,7 +190,7 @@ FROM scored ORDER BY round(score, 4) DESC, doc_id LIMIT {limit}
             "match": got == want,
             "k": len(want),
             "candidate_postings": n_postings,
-            "path": "driver" if runs_local(n_postings, k) else "scatter",
+            "path": "driver" if runs_local(n_postings) else "scatter",
             "spark_top3": got[:3],
             "duckdb_top3": want[:3],
         }
