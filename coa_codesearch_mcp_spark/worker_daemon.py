@@ -25,9 +25,8 @@ def keep_zip_directory(self) -> None:
     directory read at import time."""
 
 
-zipimport.zipimporter.invalidate_caches = keep_zip_directory
-
 if __name__ == "__main__":
     from pyspark.daemon import manager
 
+    zipimport.zipimporter.invalidate_caches = keep_zip_directory
     manager()
