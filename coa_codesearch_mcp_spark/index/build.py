@@ -59,12 +59,32 @@ def spread_input(df: DataFrame) -> DataFrame:
     real scale the scan has plenty of splits and this adds nothing
     (no shuffle). The shuffle this introduces on tiny inputs moves the
     (id, text) projection once, strictly cheaper than the serialized
-    tokenize it prevents."""
-    sc = df.sparkSession.sparkContext
-    target = sc.defaultParallelism
+    tokenize it prevents.
+
+    Only a scan is probed: a leaf relation under Project/Filter nodes
+    of the optimized plan, whose partition count is file or local-data
+    metadata. Any other input (an aggregate, a join, a cached relation)
+    is returned unchanged, because under AQE asking its RDD for a
+    partition count runs its shuffle stages; so is a Spark Connect
+    DataFrame, which has neither a JVM plan nor ``.rdd``."""
+    if not _is_scan(df):
+        return df
+    target = df.sparkSession.sparkContext.defaultParallelism
     if df.rdd.getNumPartitions() < target:
         return df.repartition(target)
     return df
+
+
+def _is_scan(df: DataFrame) -> bool:
+    """Whether ``df``'s optimized plan is Project/Filter nodes over one
+    uncached leaf relation. Planning only: no job runs."""
+    jdf = getattr(df, "_jdf", None)
+    if jdf is None:
+        return False
+    node = jdf.queryExecution().optimizedPlan()
+    while node.nodeName() in ("Project", "Filter"):
+        node = node.children().apply(0)
+    return node.children().isEmpty() and node.nodeName() != "InMemoryRelation"
 
 
 def tokenize_docs(
@@ -100,6 +120,14 @@ class LogicalIndex:
         self.doclens.cache()
         self.dictionary.cache()
         return self
+
+    def close(self) -> None:
+        """Release the persisted per-doc token rows and whatever
+        cache() pinned. Idempotent; the relations stay usable, they
+        just recompute from their inputs."""
+        for df in (self.tokens, self.postings, self.doclens, self.dictionary):
+            if df is not None:
+                df.unpersist()
 
 
 def build_logical_index(

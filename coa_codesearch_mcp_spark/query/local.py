@@ -4,13 +4,24 @@ store (query/store_executor.py) and the live tier
 
 A query whose candidate postings -- the summed dictionary df of its
 terms and NOT-terms, plus the committed tombstone rows on the live
-tier -- number at most LOCAL_MAX_POSTINGS skips the Spark scatter. One Spark scan brings its column-pruned posting blocks
-to the driver (``toPandas``), and the tier's own per-range scorer
-(wand_topk, _score_range_segments, phrase_candidates) runs unchanged
-in a loop over range_id. At that size a scatter is almost all fixed
-cost (2-4 jobs with Python-worker tasks), against 0.4-0.5 ms per
-128-posting block for WAND and 1.3-1.9 ms for phrase matching on the
-driver. Above the constant the scatter runs as before.
+tier -- number at most LOCAL_MAX_POSTINGS skips the Spark scatter.
+One Spark scan brings its column-pruned posting blocks to the driver
+(``toPandas``), and the tier's own per-range scorer (wand_topk,
+_score_range_segments, phrase_candidates) runs unchanged in a loop
+over range_id. At that size a scatter is almost all fixed cost (2-4
+jobs with Python-worker tasks), against 0.4-0.5 ms per 128-posting
+block for WAND and 1.3-1.9 ms for phrase matching on the driver. Above
+the constant the scatter runs as before.
+
+Everything else such a query needs is per-snapshot driver state, so a
+warm query is that one scan. The store keeps term metadata in
+IndexReader's term cache, reset when the segment's manifest changes.
+The live tier keeps each term's per-segment dictionary df and
+hidden-df corrections, plus the resolved tombstone map (while the
+committed tombstone rows fit this bound), in one holder keyed by
+(epoch, committed delta ids, segment reader tokens)
+(streaming/incremental.py _Snapshot); a committed batch, a compaction
+flip or an in-place segment rebuild replaces it.
 
 One pass over every range needs no global threshold seed, so the OR
 bootstrap pre-pass is skipped here: each range's output is what the

@@ -312,3 +312,119 @@ def test_worker_daemon_keeps_zip_directories(spark):
 
     got = spark.range(1).select(probe("id").alias("f")).first()["f"]
     assert got == "keep_zip_directory"
+
+
+WARM_LIVE = [
+    ("or", lambda s: s.search_or(["common", "gamma"], k=10)),
+    ("and", lambda s: s.search_and(["alpha", "gamma"], k=10)),
+    ("phrase", lambda s: s.search_phrase(["alpha", "beta"], k=10)),
+]
+
+
+@pytest.mark.parametrize("name,run", WARM_LIVE, ids=[q[0] for q in WARM_LIVE])
+def test_live_local_query_launches_one_job(spark, live, name, run):
+    """A warm live query on two segments with tombstones is one Spark
+    job, the block scan: its terms' dictionary df and hidden-df
+    corrections and the resolved tombstone map are per-snapshot state."""
+    run(live).collect()  # warm the snapshot's term and tombstone caches
+    rows, jobs = _jobs(spark, lambda: run(live))
+    assert rows, name
+    assert len(jobs) == 1, (name, jobs)
+
+
+def test_heavy_tier_keeps_no_tombstone_map(monkeypatch, spark, live):
+    """The resolved tombstone map is kept per snapshot only while the
+    committed rows fit LOCAL_MAX_POSTINGS; wand_stats over a heavier
+    tier still reads every row, for its own call."""
+    fresh = DeltaIndexManager(spark, live.root, live.cfg)
+    want = fresh.wand_stats(["common", "gamma"], k=10, bootstrap=False)[0]
+    assert fresh._snapshot().tomb_map  # within the bound: kept
+
+    heavy = DeltaIndexManager(spark, live.root, live.cfg)
+    n_tombs = heavy._tombstone_rows()
+    monkeypatch.setattr(local, "LOCAL_MAX_POSTINGS", n_tombs - 1)
+    got = heavy.wand_stats(["common", "gamma"], k=10, bootstrap=False)[0]
+    assert got == want
+    assert heavy._snapshot().tomb_map is None
+    assert heavy._snapshot().terms  # term metadata is still kept
+
+
+def _same_hits(got, want):
+    """Same doc ids in the same order, scores within one rounding step
+    (the oracle rounds in Python, the engine with Spark's HALF_UP)."""
+    return len(got) == len(want) and all(
+        gd == wd and abs(gs - ws) <= 1.5e-4 for (gd, gs), (wd, ws) in zip(got, want)
+    )
+
+
+def test_warm_live_caches_follow_every_commit(spark, tmp_path):
+    """A manager whose snapshot caches are warm answers like the oracle
+    over its current corpus after apply_batch (new df and tombstones),
+    merge_deltas and rebuild (epoch flips)."""
+    from coa_codesearch_mcp_spark.index.hashing import xxh64_signed
+    from coa_codesearch_mcp_spark.oracle import pandas_oracle as po
+
+    cfg = IndexConfig(
+        field="content_patterns", n_buckets=4, range_size=1 << 60,
+        chunk_size=1 << 60, chunks_per_wave=32, salt_threshold=10_000,
+    )
+    corpus = {f"doc://{i}": _text(i) for i in range(120)}
+    schema = "url string, op string, text string, warc_ts timestamp, event_ts timestamp"
+
+    def docs():
+        return spark.createDataFrame(
+            sorted(corpus.items()), "url string, text string"
+        ).withColumn("doc_id", _url_doc_id())
+
+    def apply(m, events):
+        m.apply_batch(spark.createDataFrame(
+            [(u, op, t, TS if t else None, TS) for u, op, t in events], schema
+        ))
+        for u, op, t in events:
+            if op == "delete":
+                corpus.pop(u, None)
+            else:
+                corpus[u] = t
+
+    queries = [
+        (lambda m: m.search_or(["common", "gamma"], k=10),
+         lambda ix: po.search_or(ix, ["common", "gamma"], 10)),
+        (lambda m: m.search_and(["alpha", "gamma"], k=10),
+         lambda ix: po.search_and(ix, ["alpha", "gamma"], 10)),
+        (lambda m: m.search_or(["alpha"], k=10, exclude=["delta"]),
+         lambda ix: po.search_not(ix, ["alpha"], ["delta"], 10)),
+        (lambda m: m.search_phrase(["alpha", "beta"], k=10),
+         lambda ix: po.search_phrase(ix, ["alpha", "beta"], 10)),
+    ]
+
+    def check(m, step):
+        ix = po.build_oracle_index(
+            [(xxh64_signed(u.encode()) & ((1 << 62) - 1), t) for u, t in corpus.items()]
+        )
+        for i, (run, oracle) in enumerate(queries):
+            assert _same_hits(_rows(run(m)), oracle(ix)), (step, i)
+
+    m = DeltaIndexManager(spark, str(tmp_path / "inc_warm"), cfg)
+    m.init_main(docs())
+    apply(m, [
+        ("doc://0", "upsert", "common gamma alpha beta gamma"),
+        ("doc://7", "delete", None),
+        ("doc://new1", "upsert", "common alpha beta gamma"),
+    ])
+    check(m, "first batch")
+    assert m._snap.terms and m._snap.tomb_map  # warm
+    apply(m, [
+        ("doc://11", "delete", None),
+        ("doc://14", "upsert", "alpha beta gamma gamma delta"),
+        ("doc://new1", "upsert", "common gamma"),
+        ("doc://new2", "upsert", "gamma alpha beta alpha beta"),
+    ])
+    check(m, "apply_batch")
+    assert m._snap.terms and m._snap.tomb_map
+    m.merge_deltas()
+    check(m, "merge_deltas")
+    assert m._snap.terms
+    apply(m, [("doc://22", "delete", None), ("doc://new3", "upsert", "gamma delta")])
+    check(m, "apply_batch after merge")
+    m.rebuild(docs())
+    check(m, "rebuild")
