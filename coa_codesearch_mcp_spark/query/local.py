@@ -5,16 +5,17 @@ store (query/store_executor.py) and the live tier
 A query whose candidate postings -- the summed dictionary df of its
 terms and NOT-terms, plus the committed tombstone rows on the live
 tier -- number at most LOCAL_MAX_POSTINGS skips the Spark scatter.
-One Spark scan brings its column-pruned posting blocks to the driver
-(``toPandas``), and the tier's own per-range scorer (wand_topk,
-_score_range_segments, phrase_candidates) runs unchanged in a loop
-over range_id. At that size a scatter is almost all fixed cost (2-4
-jobs with Python-worker tasks), against 0.4-0.5 ms per 128-posting
-block for WAND and 1.3-1.9 ms for phrase matching on the driver. Above
-the constant the scatter runs as before.
+Its column-pruned posting blocks are read from the segment's Parquet
+files on the driver (IndexReader.read_blocks, no Spark job), and the
+tier's own per-range scorer (wand_topk, _score_range_segments,
+phrase_candidates) runs unchanged in a loop over range_id. At that
+size a scatter is almost all fixed cost (2-4 jobs with Python-worker
+tasks), against 0.4-0.5 ms per 128-posting block for WAND and 1.3-1.9
+ms for phrase matching on the driver. Above the constant the scatter
+runs as before.
 
 Everything else such a query needs is per-snapshot driver state, so a
-warm query is that one scan. The store keeps term metadata in
+warm query launches no Spark job. The store keeps term metadata in
 IndexReader's term cache, reset when the segment's manifest changes.
 The live tier keeps each term's per-segment dictionary df and
 hidden-df corrections, plus the resolved tombstone map (while the
@@ -42,6 +43,7 @@ from __future__ import annotations
 
 import heapq
 
+import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -70,12 +72,11 @@ def runs_local(n_rows: int) -> bool:
     return n_rows <= LOCAL_MAX_POSTINGS
 
 
-def score_ranges(blocks: DataFrame, per_range) -> list[tuple]:
-    """One Spark scan of ``blocks``, then ``per_range(range_pdf)`` for
-    each range_id on the driver; the rows it returns are concatenated."""
-    pdf = blocks.toPandas()
+def score_ranges(blocks: pd.DataFrame, per_range) -> list[tuple]:
+    """``per_range(range_pdf)`` for each range_id of the driver-read
+    ``blocks``; the rows it returns are concatenated."""
     out: list[tuple] = []
-    for _, grp in pdf.groupby("range_id", sort=True):
+    for _, grp in blocks.groupby("range_id", sort=True):
         out.extend(per_range(grp))
     return out
 

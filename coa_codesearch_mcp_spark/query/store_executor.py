@@ -4,18 +4,19 @@ matching per doc range, on the driver or as a Spark scatter-gather.
 Flow per query (SURVEY §3.1 step 9c):
 
   dictionary lookup (tiny, collected; cached)    [driver]
-  postings blocks: bucket-pruned + term-pruned   [parquet scan]
 
 then one of two executors, chosen by the query's candidate postings
-(the summed dictionary df of its terms and NOT-terms):
+(the summed dictionary df of its terms and NOT-terms), each reading
+the blocks bucket-pruned, row-group-pruned on term and column-pruned:
 
   <= LOCAL_MAX_POSTINGS (2^14), query/local.py — the driver executor:
-  blocks toPandas()                              [one Spark job]
+  blocks read from Parquet (read_blocks)         [driver, zero jobs]
   per-range WAND / phrase loop over range_id     [driver]
   round(score, 4) over an Arrow local relation;  [driver, zero jobs]
   top-k
 
   above it — the scatter:
+  postings blocks (postings_blocks)              [parquet scan]
   repartition by range_id                        [narrow shuffle of the
                                                   candidate block set —
                                                   proportional to query
@@ -52,6 +53,7 @@ from pyspark.sql import functions as F
 
 from ..index.store import IndexReader
 from .bm25 import idf_py
+from .cache import rows_to_local_df
 from .local import phrase_scores, runs_local, score_ranges, top_k
 from .wand import BOOTSTRAP_DF_RATIO, BOOTSTRAP_MIN_DF_FACTOR, wand_topk
 
@@ -89,14 +91,7 @@ class StoreSearcher:
     ) -> DataFrame:
         terms = sorted(set(terms))
         exclude = sorted(set(exclude or []))
-        # WAND never reads positions: prune pos_blob (and the other
-        # unused posting columns) out of the scan + Arrow scatter
-        # (round-5 VERDICT #1; guide §2.3 project-before-the-boundary)
-        from ..index.store import WAND_BLOCK_COLUMNS
-
-        blocks, info = self.reader.postings_blocks(
-            terms + exclude, columns=WAND_BLOCK_COLUMNS
-        )
+        info = self.reader.lookup_terms(terms + exclude)
         present = [t for t in terms if t in info]
         if not present or (mode == "and" and len(present) < len(terms)):
             return self._empty()
@@ -137,9 +132,18 @@ class StoreSearcher:
                 banned=banned.__contains__ if banned else None,
             )
 
+        # WAND never reads positions: prune pos_blob (and the other
+        # unused posting columns) out of the read + Arrow scatter
+        # (round-5 VERDICT #1; guide §2.3 project-before-the-boundary)
+        from ..index.store import WAND_BLOCK_COLUMNS
+
         if runs_local(sum(v["df"] for v in info.values())):
+            blocks = self._read_blocks(info, WAND_BLOCK_COLUMNS)
             hits = score_ranges(blocks, lambda pdf: per_range(pdf, 0.0))
             return top_k(self.reader.spark, hits, k)
+        blocks, _ = self.reader.postings_blocks(
+            terms + exclude, columns=WAND_BLOCK_COLUMNS
+        )
         theta0 = self._bootstrap_theta(blocks, info, present, k, mode, exclude)
         local = (
             blocks.repartition("range_id")
@@ -156,6 +160,11 @@ class StoreSearcher:
             .orderBy(F.desc("score"), F.asc("doc_id"))
             .limit(k)
         )
+
+    def _read_blocks(self, info: dict[str, dict], columns: list[str]) -> pd.DataFrame:
+        """The driver executor's blocks of the looked-up terms."""
+        buckets = {v["bucket"] for v in info.values()}
+        return self.reader.read_blocks(sorted(info), buckets, columns)
 
     # gate constants live in query/wand.py, shared with the live tier
     BOOTSTRAP_DF_RATIO = BOOTSTRAP_DF_RATIO
@@ -250,9 +259,7 @@ class StoreSearcher:
         uniq = sorted(set(terms))
         from ..index.store import PHRASE_BLOCK_COLUMNS
 
-        blocks, info = self.reader.postings_blocks(
-            uniq, columns=PHRASE_BLOCK_COLUMNS
-        )
+        info = self.reader.lookup_terms(uniq)
         if any(t not in info for t in uniq):
             return self._empty()
         n = len(terms)
@@ -263,13 +270,14 @@ class StoreSearcher:
 
         if runs_local(sum(v["df"] for v in info.values())):
             cands = score_ranges(
-                blocks,
+                self._read_blocks(info, PHRASE_BLOCK_COLUMNS),
                 lambda pdf: phrase_candidates(pdf, seq, max_span).itertuples(
                     index=False, name=None
                 ),
             )
             hits = phrase_scores(cands, self.reader.n_docs, self.reader.avgdl)
             return top_k(self.reader.spark, hits, k)
+        blocks, _ = self.reader.postings_blocks(uniq, columns=PHRASE_BLOCK_COLUMNS)
         cand = blocks.repartition("range_id").groupBy("range_id").applyInPandas(
             lambda key, pdf: phrase_candidates(pdf, seq, max_span),
             CAND_SCHEMA,
@@ -335,7 +343,8 @@ class StoreSearcher:
         return self.search_or(terms, k) if terms else self._empty()
 
     def _empty(self) -> DataFrame:
-        return self.reader.spark.createDataFrame([], _RESULT_SCHEMA)
+        # a SQL relation, zero jobs (an empty createDataFrame is an RDD scan)
+        return rows_to_local_df(self.reader.spark, [])
 
     # ------------------------------------------------- facade contract
 

@@ -213,14 +213,53 @@ class _LiveQuery(NamedTuple):
     live_df: dict[str, int]
     seg_df: dict[tuple[str, int], int]
     seg_avgdl: dict[int, float]
-    blocks: DataFrame
     n_tombs: int
+    segs: list[tuple[int, IndexReader]]
+    terms: list[str]  # query terms and NOT-terms
+    columns: list[str] | None
 
     def driver_rows(self) -> int:
         """Rows the driver executor would hold: the candidate postings
         (per-segment df of terms and NOT-terms) plus every committed
         tombstone row, which it reads whole."""
         return sum(self.seg_df.values()) + self.n_tombs
+
+    def _seg_buckets(self, r: IndexReader) -> list[int]:
+        # a segment's bucket set is computed driver-side from the
+        # query terms (pure hash)
+        from ..index.hashing import term_bucket
+
+        return sorted({term_bucket(t, r.n_buckets) for t in self.terms})
+
+    def local_blocks(self) -> pd.DataFrame:
+        """The driver executor's blocks: each segment's read from its
+        Parquet files (IndexReader.read_blocks, no Spark job), tagged
+        with seg_id."""
+        return pd.concat(
+            [
+                r.read_blocks(self.terms, self._seg_buckets(r), self.columns)
+                .assign(seg_id=seg_id)
+                for seg_id, r in self.segs
+            ],
+            ignore_index=True,
+        )
+
+    def spark_blocks(self) -> DataFrame:
+        """The scatter's blocks: the per-segment bucket- and
+        term-pruned, column-projected scans, tagged with seg_id and
+        unioned (lazy; the scatter and the OR bootstrap build it)."""
+        out = None
+        for seg_id, r in self.segs:
+            blocks = (
+                r.postings_df()
+                .filter(F.col("bucket").isin(self._seg_buckets(r)))
+                .filter(F.col("term").isin(self.terms))
+            )
+            if self.columns is not None:
+                blocks = blocks.select(*self.columns)
+            tagged = blocks.withColumn("seg_id", F.lit(seg_id))
+            out = tagged if out is None else out.unionByName(tagged)
+        return out
 
 
 class _Snapshot:
@@ -940,15 +979,19 @@ class DeltaIndexManager:
         columns: list[str] | None = None,
     ) -> _LiveQuery | None:
         """Shared driver-side planning for both live-tier executors:
-        corpus stats, idfs, per-segment df and avgdl, and the tagged
-        blocks DF (_LiveQuery). The range-keyed tombstone relation is
+        corpus stats, idfs, per-segment df and avgdl, and the segments
+        whose blocks the chosen executor reads (_LiveQuery): the driver
+        path from Parquet on the driver (local_blocks), the scatter
+        and the OR bootstrap as a tagged Spark union (spark_blocks),
+        built only when they run. The range-keyed tombstone relation is
         built by the scatter call sites alone (_tombs_by_range): the
         driver path never reads it.
 
-        ``columns``: optional posting-column projection (store.py
+        ``columns``: posting-column projection (store.py
         WAND_BLOCK_COLUMNS / PHRASE_BLOCK_COLUMNS) applied per segment
-        BEFORE the union + cogroup scatter, so non-phrase live queries
-        never read or Arrow-ship pos_blob (round-5 VERDICT #1).
+        on either path, so non-phrase live queries never read or
+        Arrow-ship pos_blob (round-5 VERDICT #1); the driver path
+        needs it.
 
         Live df is DICTIONARY ARITHMETIC — per-segment dictionary df
         minus the committed hidden-df corrections — with ZERO posting
@@ -962,8 +1005,6 @@ class DeltaIndexManager:
         the query can match nothing."""
         from ..query.bm25 import idf_py
 
-        from ..index.hashing import term_bucket
-
         n_docs, avgdl = self.combined_stats()
         segs = self.segments()
         if not segs or n_docs == 0:
@@ -971,22 +1012,6 @@ class DeltaIndexManager:
 
         all_terms = sorted(set(terms + exclude))
         meta = self._term_meta(segs, all_terms)
-        all_blocks = None
-        for seg_id, r in segs:
-            # each segment's bucket set is computed driver-side from
-            # the query terms (pure hash); posting-block DFs are lazy
-            buckets = sorted({term_bucket(t, r.n_buckets) for t in all_terms})
-            blocks = (
-                r.postings_df()
-                .filter(F.col("bucket").isin(buckets))
-                .filter(F.col("term").isin(all_terms))
-            )
-            if columns is not None:
-                blocks = blocks.select(*columns)
-            tagged = blocks.withColumn("seg_id", F.lit(seg_id))
-            all_blocks = (
-                tagged if all_blocks is None else all_blocks.unionByName(tagged)
-            )
         seg_df = {
             (t, s): df for t in all_terms for s, df in meta[t][0].items()
         }
@@ -1000,8 +1025,8 @@ class DeltaIndexManager:
                 idfs[t] = idf_py(live, n_docs)
         return _LiveQuery(
             n_docs, avgdl, idfs, live_df, seg_df,
-            {seg_id: r.avgdl for seg_id, r in segs}, all_blocks,
-            self._tombstone_rows(),
+            {seg_id: r.avgdl for seg_id, r in segs},
+            self._tombstone_rows(), segs, all_terms, columns,
         )
 
     def _term_meta(
@@ -1120,17 +1145,17 @@ class DeltaIndexManager:
 
     def _score_local(self, ctx: _LiveQuery, per_range) -> list[tuple]:
         """The driver-side executor (query/local.py) over the live
-        blocks: ``per_range(range_pdf, tomb_map)`` per range_id, with
-        the committed tombstones resolved once per snapshot
-        (_tomb_map), so a warm query is the block scan alone: one
-        Spark job. Routing counts those rows (_LiveQuery.driver_rows),
-        so a tier with many tombstones sends even a small query to the
-        scatter, which cogroups each range with its own tombstone
-        slice."""
+        blocks, read on the driver (_LiveQuery.local_blocks):
+        ``per_range(range_pdf, tomb_map)`` per range_id, with the
+        committed tombstones resolved once per snapshot (_tomb_map),
+        so a warm query launches no Spark job. Routing counts those
+        rows (_LiveQuery.driver_rows), so a tier with many tombstones
+        sends even a small query to the scatter, which cogroups each
+        range with its own tombstone slice."""
         from ..query.local import score_ranges
 
         tomb_map = self._tomb_map(ctx.n_tombs)
-        return score_ranges(ctx.blocks, lambda pdf: per_range(pdf, tomb_map))
+        return score_ranges(ctx.local_blocks(), lambda pdf: per_range(pdf, tomb_map))
 
     def _bootstrap_theta_live(
         self, ctx: _LiveQuery, k: int, mode: str, exclude: list[str]
@@ -1175,7 +1200,7 @@ class DeltaIndexManager:
             return pd.DataFrame(hits, columns=["doc_id", "score"])
 
         scores = (
-            ctx.blocks.filter(F.col("term") == rare)
+            ctx.spark_blocks().filter(F.col("term") == rare)
             .groupby("range_id")
             .cogroup(self._tombs_by_range().groupby("range_id"))
             .applyInPandas(
@@ -1204,7 +1229,7 @@ class DeltaIndexManager:
         n_required = len(terms) if mode == "and" else None
         exclude_set = set(exclude)
         # plain values only: the scatter pickles this closure, and ctx
-        # holds DataFrames
+        # holds the segment readers
         idfs, avgdl, seg_avgdl = ctx.idfs, ctx.avgdl, ctx.seg_avgdl
 
         def scorer(pdf, tomb_map, k, theta0=0.0, stats=None):
@@ -1238,15 +1263,16 @@ class DeltaIndexManager:
         per-segment dictionary df summed over terms and NOT-terms) plus
         the committed tombstone rows are at most query/local.py's
         LOCAL_MAX_POSTINGS (2^14, from the measured crossover in
-        BENCH/local_crossover.json), the blocks are scanned to the
-        driver and scored there in a loop over range_id, without the OR
-        bootstrap, instead of a cogrouped applyInPandas scatter. Term
-        metadata and the resolved tombstone map are per-snapshot state
-        (_Snapshot, see _query_context and _score_local), so a warm
-        query is one Spark job, the block scan; a cold one adds the
-        metadata collect for unseen terms and, once per snapshot, the
-        tombstone read. Any commit, compaction flip or in-place segment
-        rebuild invalidates that state. Larger queries, and any query
+        BENCH/local_crossover.json), the blocks are read from the
+        segments' Parquet files on the driver and scored there in a
+        loop over range_id, without the OR bootstrap, instead of a
+        cogrouped applyInPandas scatter. Term metadata and the resolved
+        tombstone map are per-snapshot state (_Snapshot, see
+        _query_context and _score_local), so a warm query launches no
+        Spark job; a cold one runs the metadata collect for unseen
+        terms and, once per snapshot, the tombstone read. Any commit,
+        compaction flip or in-place segment rebuild invalidates that
+        state. Larger queries, and any query
         over a tier with more tombstone rows than the bound, take the
         scatter, seeded by the OR bootstrap pre-pass; only the scatter
         builds the range-keyed tombstone relation (_tombs_by_range)."""
@@ -1272,7 +1298,7 @@ class DeltaIndexManager:
             )
 
         local = (
-            ctx.blocks.groupby("range_id")
+            ctx.spark_blocks().groupby("range_id")
             .cogroup(self._tombs_by_range().groupby("range_id"))
             .applyInPandas(
                 lambda left, right: per_range(left, right),
@@ -1326,10 +1352,10 @@ class DeltaIndexManager:
         tombstone rows are at most LOCAL_MAX_POSTINGS matches on the
         driver (query/local.py) and scores with bm25.contrib_py over the
         exact candidate count; larger ones run the cogrouped candidate
-        scatter. The driver path reuses the snapshot's term metadata
-        and resolved tombstone map (_Snapshot), so a warm phrase is one
-        Spark job, the block scan, until the next commit, compaction
-        flip or in-place segment rebuild."""
+        scatter. The driver path reads its blocks on the driver and
+        reuses the snapshot's term metadata and resolved tombstone map
+        (_Snapshot), so a warm phrase launches no Spark job until the
+        next commit, compaction flip or in-place segment rebuild."""
         from ..query.bm25 import bm25_contrib
         from ..query.local import phrase_scores, runs_local, top_k
         from ..query.phrase import CAND_SCHEMA, phrase_candidates
@@ -1370,7 +1396,7 @@ class DeltaIndexManager:
             return phrase_candidates(pdf, seq, max_span, visible=_visible(tomb_map))
 
         cand = (
-            ctx.blocks.groupby("range_id")
+            ctx.spark_blocks().groupby("range_id")
             .cogroup(self._tombs_by_range().groupby("range_id"))
             .applyInPandas(per_range, CAND_SCHEMA)
         )
@@ -1394,7 +1420,10 @@ class DeltaIndexManager:
         return scored.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
 
     def _empty_hits(self) -> DataFrame:
-        return self.spark.createDataFrame([], "doc_id long, score double")
+        from ..query.cache import rows_to_local_df
+
+        # a SQL relation, zero jobs (an empty createDataFrame is an RDD scan)
+        return rows_to_local_df(self.spark, [])
 
     def _expand(self, predicate) -> list[str]:
         """Union of every live segment's dictionary, filtered +

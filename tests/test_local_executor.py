@@ -1,15 +1,25 @@
 """Driver-side executor for small-candidate queries (query/local.py):
-identical rows to the Spark scatter on the store and the live tier,
-one Spark job per warm store query, and the reader/live-tier defects
-that path runs through."""
+identical rows to the Spark scatter on the store and the live tier, no
+Spark job per warm driver-path query (its blocks are read from Parquet
+on the driver, IndexReader.read_blocks, row for row what the Spark scan
+returns), and the reader/live-tier defects that path runs through."""
 
 import datetime
+import os
 import time
 
+import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
-from coa_codesearch_mcp_spark.index.store import IndexConfig, IndexReader, IndexWriter
+from coa_codesearch_mcp_spark.index.hashing import term_bucket
+from coa_codesearch_mcp_spark.index.store import (
+    PHRASE_BLOCK_COLUMNS,
+    WAND_BLOCK_COLUMNS,
+    IndexConfig,
+    IndexReader,
+    IndexWriter,
+)
 from coa_codesearch_mcp_spark.query import local
 from coa_codesearch_mcp_spark.query.ast import BoolQ, TermQ
 from coa_codesearch_mcp_spark.query.store_executor import StoreSearcher
@@ -190,25 +200,26 @@ def _jobs(spark, run):
     return rows, list(sc.statusTracker().getJobIdsForGroup(group))
 
 
-def test_store_local_query_launches_one_job(spark, store):
-    """A warm driver-path query is one Spark job: the block scan. The
-    term cache already holds the dictionary rows, and the rounding and
-    the top-k run over local relations."""
+def test_store_local_query_launches_no_job(spark, store):
+    """A warm driver-path query launches no Spark job: the term cache
+    already holds the dictionary rows, the blocks are read from Parquet
+    on the driver, and the rounding and the top-k run over local
+    relations."""
     store.search_or(["common", "gamma"], k=10).collect()  # warm term cache
     rows, jobs = _jobs(spark, lambda: store.search_or(["common", "gamma"], k=10))
     assert len(rows) == 10
-    assert len(jobs) == 1, jobs
+    assert len(jobs) == 0, jobs
 
 
-def test_store_local_empty_result_launches_one_job(spark, store):
+def test_store_local_empty_result_launches_no_job(spark, store):
     """A phrase whose terms never meet ("delta" ends its docs) returns
-    no rows, still from the block scan alone: an empty pandas frame
-    would become an RDD scan, so no rows is a SQL relation."""
+    no rows without a Spark job: an empty pandas frame would become an
+    RDD scan, so no rows is a SQL relation."""
     phrase = lambda: store.search_phrase(["delta", "alpha"], k=10)  # noqa: E731
     phrase().collect()  # warm term cache
     rows, jobs = _jobs(spark, phrase)
     assert rows == []
-    assert len(jobs) == 1, jobs
+    assert len(jobs) == 0, jobs
 
 
 def test_wand_stats_runs_local_executor(live):
@@ -322,14 +333,15 @@ WARM_LIVE = [
 
 
 @pytest.mark.parametrize("name,run", WARM_LIVE, ids=[q[0] for q in WARM_LIVE])
-def test_live_local_query_launches_one_job(spark, live, name, run):
-    """A warm live query on two segments with tombstones is one Spark
-    job, the block scan: its terms' dictionary df and hidden-df
-    corrections and the resolved tombstone map are per-snapshot state."""
+def test_live_local_query_launches_no_job(spark, live, name, run):
+    """A warm live query on two segments with tombstones launches no
+    Spark job: its terms' dictionary df and hidden-df corrections and
+    the resolved tombstone map are per-snapshot state, and each
+    segment's blocks are read from Parquet on the driver."""
     run(live).collect()  # warm the snapshot's term and tombstone caches
     rows, jobs = _jobs(spark, lambda: run(live))
     assert rows, name
-    assert len(jobs) == 1, (name, jobs)
+    assert len(jobs) == 0, (name, jobs)
 
 
 def test_heavy_tier_keeps_no_tombstone_map(monkeypatch, spark, live):
@@ -428,3 +440,95 @@ def test_warm_live_caches_follow_every_commit(spark, tmp_path):
     check(m, "apply_batch after merge")
     m.rebuild(docs())
     check(m, "rebuild")
+
+
+def test_live_local_empty_result_launches_no_job(spark, live):
+    """A warm live phrase whose terms never meet returns no rows
+    without a Spark job, like the store's."""
+    phrase = lambda: live.search_phrase(["delta", "alpha"], k=10)  # noqa: E731
+    phrase().collect()  # warm the snapshot's caches
+    rows, jobs = _jobs(spark, phrase)
+    assert rows == []
+    assert len(jobs) == 0, jobs
+
+
+BLOCK_COLUMNS = [("wand", WAND_BLOCK_COLUMNS), ("phrase", PHRASE_BLOCK_COLUMNS)]
+
+
+def _read_blocks_parity(reader, terms, columns):
+    """read_blocks equals the Spark scan of postings_blocks row for row
+    and dtype for dtype; returns the rows."""
+
+    def ordered(pdf):
+        return pdf.sort_values(["term", "range_id", "block_no"]).reset_index(drop=True)
+
+    # read first: postings_blocks would refresh a stale reader itself
+    buckets = {term_bucket(t, reader.n_buckets) for t in terms}
+    got = ordered(reader.read_blocks(terms, buckets, columns))
+    want = ordered(reader.postings_blocks(terms, columns=columns)[0].toPandas())
+    pd.testing.assert_frame_equal(got, want)
+    return got
+
+
+@pytest.mark.parametrize("name,columns", BLOCK_COLUMNS, ids=[c[0] for c in BLOCK_COLUMNS])
+def test_read_blocks_matches_spark_scan(spark, store, name, columns):
+    """A salted hot term, a selective one and an absent one, alone and
+    together."""
+    reader = IndexReader(spark, store.reader.root)
+    assert reader.lookup_terms(["common"])["common"]["n_salts"] > 1  # salted
+    assert len(_read_blocks_parity(reader, ["common"], columns)) > N_DOCS // 128
+    assert len(_read_blocks_parity(reader, ["gamma", "common", "nosuchterm"], columns))
+    assert _read_blocks_parity(reader, ["nosuchterm"], columns).empty
+
+
+@pytest.mark.parametrize("name,columns", BLOCK_COLUMNS, ids=[c[0] for c in BLOCK_COLUMNS])
+def test_read_blocks_bucket_without_files(spark, tmp_path, name, columns):
+    """A term whose bucket no indexed term hashed to has no directory
+    to read: no rows, the scan's dtypes."""
+    root = str(tmp_path / "ix_sparse")
+    cfg = IndexConfig(field="content", n_buckets=64, range_size=1 << 14, chunk_size=1 << 14)
+    IndexWriter(spark, root, cfg).build(
+        spark.createDataFrame([(0, "alpha beta")], "doc_id long, text string")
+    )
+    reader = IndexReader(spark, root)
+    probe = next(
+        t for t in (f"absent{i}" for i in range(1000))
+        if not os.path.isdir(os.path.join(root, "postings", f"bucket={term_bucket(t, 64)}"))
+    )
+    assert _read_blocks_parity(reader, [probe], columns).empty
+    assert len(_read_blocks_parity(reader, [probe, "alpha"], columns)) == 1
+
+
+@pytest.mark.parametrize("name,columns", BLOCK_COLUMNS, ids=[c[0] for c in BLOCK_COLUMNS])
+def test_read_blocks_follows_in_place_rebuild(spark, tmp_path, name, columns):
+    """The file list pinned per snapshot is listed again once the
+    snapshot token moves: the old files are gone after the rebuild."""
+    from coa_codesearch_mcp_spark.functions.tools_ops import clear_index
+
+    root = str(tmp_path / "ix_rebuild_blocks")
+    cfg = IndexConfig(field="content", n_buckets=2, range_size=1 << 14, chunk_size=1 << 14)
+    v1 = spark.createDataFrame(
+        [(0, "alpha beta"), (1, "alpha gamma")], "doc_id long, text string"
+    )
+    IndexWriter(spark, root, cfg).build(v1)
+    reader = IndexReader(spark, root)
+    assert _read_blocks_parity(reader, ["alpha"], columns)["n"].sum() == 2
+    time.sleep(0.02)
+    clear_index(root)
+    v2 = v1.unionByName(
+        spark.createDataFrame([(2, "alpha delta")], "doc_id long, text string")
+    )
+    IndexWriter(spark, root, cfg).build(v2)
+    assert _read_blocks_parity(reader, ["alpha"], columns)["n"].sum() == 3
+
+
+def test_absent_term_query_launches_no_job(spark, store, live):
+    """A warm query on a term no segment holds returns no rows without
+    a Spark job on either tier: the term caches remember absent terms,
+    and no rows is a SQL relation."""
+    for tier in (store, live):
+        query = lambda: tier.search_or(["nosuchterm"], k=10)  # noqa: E731
+        query().collect()  # warm the term cache
+        rows, jobs = _jobs(spark, query)
+        assert rows == []
+        assert len(jobs) == 0, (tier, jobs)

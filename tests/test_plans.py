@@ -201,9 +201,11 @@ def test_store_phrase_plan_no_global_window(spark, documents, tmp_path, no_aqe, 
 def test_local_path_block_scan_prunes_pos_blob(
     spark, documents, tmp_path, no_aqe, monkeypatch
 ):
-    """The driver-side executor scans the same column-pruned blocks as
-    the scatter: its one block scan per WAND query excludes pos_blob,
-    and only the phrase scan reads it."""
+    """The driver-side executor reads the same column-pruned blocks as
+    the scatter scans, from Parquet on the driver: every block read of
+    a WAND query excludes pos_blob, and only the phrase reads it."""
+    import pyarrow.parquet as pq
+
     from coa_codesearch_mcp_spark.index.store import (
         IndexConfig,
         IndexReader,
@@ -219,21 +221,25 @@ def test_local_path_block_scan_prunes_pos_blob(
     IndexWriter(spark, root, cfg).build(documents.limit(200))
     ss = StoreSearcher(IndexReader(spark, root))
 
-    df_cls = type(spark.range(1))
-    scans = []
-    to_pandas = df_cls.toPandas
+    reads = []
+    read_row_groups = pq.ParquetFile.read_row_groups
 
-    def spy(self):
-        scans.append(self._jdf.queryExecution().sparkPlan().toString())
-        return to_pandas(self)
+    def spy(self, row_groups, columns=None, **kwargs):
+        reads.append(list(columns))
+        return read_row_groups(self, row_groups, columns=columns, **kwargs)
 
-    monkeypatch.setattr(df_cls, "toPandas", spy)
-    ss.search_term("spark", k=5).collect()
-    ss.search_and(["spark", "stream"], k=5).collect()
-    ss.search_or(["spark"], k=5, exclude=["stream"]).collect()
-    assert len(scans) == 3, scans
-    for plan in scans:
-        assert "pos_blob" not in plan, plan
-        assert "max_tf" not in plan, plan
+    monkeypatch.setattr(pq.ParquetFile, "read_row_groups", spy)
+    for run in (
+        lambda: ss.search_term("spark", k=5),
+        lambda: ss.search_and(["spark", "stream"], k=5),
+        lambda: ss.search_or(["spark"], k=5, exclude=["stream"]),
+    ):
+        reads.clear()
+        run().collect()
+        assert reads
+        for cols in reads:
+            assert "pos_blob" not in cols, cols
+            assert "max_tf" not in cols, cols
+    reads.clear()
     ss.search_phrase(["fast", "key"], k=5).collect()
-    assert len(scans) == 4 and "pos_blob" in scans[-1], scans[-1]
+    assert reads and all("pos_blob" in cols for cols in reads), reads

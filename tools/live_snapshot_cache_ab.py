@@ -1,5 +1,5 @@
 """Interleaved A/B of two checkouts on perfbench's end-to-end metrics,
-plus the jobs and per-phase wall time of warm live queries.
+plus the jobs and per-phase wall time of warm live and store queries.
 
     python tools/live_snapshot_cache_ab.py <parent_dir> <change_dir> <out.json> \
         [--seeds 701,702,...] [--workloads live_churn,search_store]
@@ -12,10 +12,14 @@ load average read before each run. Then each checkout runs this file's
 seeded micro-batch), one warm-up of each pooled query (one ``and``, one
 ``phrase``), then five timed repetitions of each, recording the Spark
 jobs the query launched and the wall time spent in
-``DeltaIndexManager._query_context``, ``_score_local`` (tombstone map
-plus block scan), ``query.local.score_ranges`` (block scan and
-per-range scoring) and ``query.local.top_k``. The output is rewritten
-after every run, so an interrupted A/B keeps what it measured.
+``DeltaIndexManager._query_context``, ``_score_local`` (tombstone map,
+block read and scoring), ``IndexReader.read_blocks`` (the driver-side
+block read, where the checkout has it), ``query.local.score_ranges``
+(per-range scoring, plus the block scan where the checkout scans with
+Spark) and ``query.local.top_k``. Then the same for perfbench's
+search_store set-up (600 pages, one query per class, the ``expand``
+class through the engine facade). The output is rewritten after every
+run, so an interrupted A/B keeps what it measured.
 """
 
 from __future__ import annotations
@@ -68,7 +72,8 @@ def run_probe(checkout: str, seed: int) -> dict:
 
 
 def probe(seed: int) -> dict:
-    """Warm live-query phases in the checkout this process runs from."""
+    """Warm live- and store-query phases in the checkout this process
+    runs from."""
     root = os.getcwd()
     sys.path[:0] = [root, os.path.join(root, "perfbench")]
     import shutil
@@ -78,14 +83,20 @@ def probe(seed: int) -> dict:
     from pyspark.sql import functions as F
 
     import workloads as wl
-    from common import CLASSES, generate_pages, make_queries
-    from coa_codesearch_mcp_spark.query import local
+    from common import CLASSES, K, generate_pages, make_queries, query_text
+    from coa_codesearch_mcp_spark.index.store import IndexReader, IndexWriter
+    from coa_codesearch_mcp_spark.oracle.pandas_oracle import build_oracle_index
+    from coa_codesearch_mcp_spark.query import local, store_executor
+    from coa_codesearch_mcp_spark.query.engine import TextSearchEngine
+    from coa_codesearch_mcp_spark.query.store_executor import StoreSearcher
     from coa_codesearch_mcp_spark.session import get_spark
     from coa_codesearch_mcp_spark.streaming.incremental import DeltaIndexManager
 
     phases: dict[str, float] = defaultdict(float)
 
     def timed(owner, name: str, label: str) -> None:
+        if not hasattr(owner, name):  # e.g. read_blocks on an older checkout
+            return
         real = getattr(owner, name)
 
         def wrap(*args, **kwargs):
@@ -99,12 +110,42 @@ def probe(seed: int) -> dict:
 
     timed(DeltaIndexManager, "_query_context", "query_context_ms")
     timed(DeltaIndexManager, "_score_local", "score_local_ms")
-    timed(local, "score_ranges", "score_ranges_ms")
-    timed(local, "top_k", "top_k_ms")
+    timed(IndexReader, "read_blocks", "read_blocks_ms")
+    # the live tier looks these up in query.local per call, the store
+    # executor binds them at import
+    for module in (local, store_executor):
+        timed(module, "score_ranges", "score_ranges_ms")
+        timed(module, "top_k", "top_k_ms")
 
     spark = get_spark("live_phase_probe")
     spark.sparkContext.setLogLevel("ERROR")
     sc = spark.sparkContext
+
+    def warm_reps(q, run) -> dict:
+        """One warm-up, then PROBE_REPS timed runs of ``run(q)``."""
+        run(q)
+        reps = []
+        for i in range(PROBE_REPS):
+            phases.clear()
+            group = f"probe_{seed}_{i}_{time.monotonic_ns()}"
+            sc.setJobGroup(group, "warm query")
+            t0 = time.perf_counter()
+            try:
+                run(q)
+            finally:
+                sc.setJobGroup(None, None)
+            rep = {"wall_ms": (time.perf_counter() - t0) * 1000}
+            rep.update(phases)
+            rep["jobs"] = len(sc.statusTracker().getJobIdsForGroup(group))
+            reps.append(rep)
+        keys = sorted({k for r in reps for k in r})
+        return {
+            "cls": q["cls"],
+            "terms": q["terms"],
+            "median": {k: statistics.median(r.get(k, 0.0) for r in reps) for k in keys},
+            "reps": reps,
+        }
+
     work = tempfile.mkdtemp(prefix="live_probe_", dir=root)
     try:
         cfg = wl.LIVE
@@ -123,32 +164,28 @@ def probe(seed: int) -> dict:
         # the timed pool of a live_churn run with this seed
         qs = make_queries(ix, sorted(churn.live.values()), seed, 2 * len(CLASSES))
         qpool = [q for q in qs if q["cls"] in cfg["classes"]][: cfg["query_pool"]]
-        out = {"seed": seed, "segments": len(m.segments()), "queries": []}
-        for q in qpool:
-            wl.live_query(m, q)  # warm-up
-            reps = []
-            for i in range(PROBE_REPS):
-                phases.clear()
-                group = f"probe_{seed}_{i}_{time.monotonic_ns()}"
-                sc.setJobGroup(group, "warm live query")
-                t0 = time.perf_counter()
-                try:
-                    wl.live_query(m, q)
-                finally:
-                    sc.setJobGroup(None, None)
-                rep = {"wall_ms": (time.perf_counter() - t0) * 1000}
-                rep.update(phases)
-                rep["jobs"] = len(sc.statusTracker().getJobIdsForGroup(group))
-                reps.append(rep)
-            keys = sorted({k for r in reps for k in r})
-            out["queries"].append(
-                {
-                    "cls": q["cls"],
-                    "terms": q["terms"],
-                    "median": {k: statistics.median(r.get(k, 0.0) for r in reps) for k in keys},
-                    "reps": reps,
-                }
-            )
+        out = {"seed": seed, "segments": len(m.segments())}
+        out["queries"] = [warm_reps(q, lambda q: wl.live_query(m, q)) for q in qpool]
+
+        # the timed pool of a search_store run with this seed
+        pages = generate_pages(spark, wl.SEARCH["pages"], seed, wl.SEARCH["vocab"])
+        texts = pages["text"].tolist()
+        pages["doc_id"] = range(len(pages))
+        store_root = os.path.join(work, "store")
+        IndexWriter(spark, store_root, wl.STORE_CFG).build(
+            spark.createDataFrame(pages[["doc_id", "url", "text"]])
+        )
+        searcher = StoreSearcher(IndexReader(spark, store_root))
+        engine = TextSearchEngine({"content": searcher}, cache=None, use_cache=False)
+        ix = build_oracle_index(list(enumerate(texts)), analyzer="content")
+
+        def store_query(q):
+            if q["cls"] == "or":
+                return searcher.search_or(q["terms"], K).collect()
+            return engine.search(query_text(q), k=K).hits.collect()
+
+        spool = make_queries(ix, texts, seed, wl.SEARCH["query_pool"])
+        out["store_queries"] = [warm_reps(q, store_query) for q in spool]
         return out
     finally:
         spark.stop()
@@ -181,6 +218,22 @@ def summarize(pairs: list[dict], workloads: list[str]) -> dict:
             }
         s["failed"] = [r[side].get("failed") for r in rows for side in ("parent", "change")]
         out[w] = s
+    return out
+
+
+def summarize_probes(pairs: list[dict]) -> dict:
+    """Per side, tier and query class: the range over pairs of each
+    probed query's median jobs and wall time."""
+    out: dict = {}
+    for p in pairs:
+        for side, probe_out in p.get("warm_probe", {}).items():
+            for tier in ("queries", "store_queries"):
+                for q in probe_out.get(tier, []):
+                    row = out.setdefault(side, {}).setdefault(tier, {}).setdefault(
+                        q["cls"], {"jobs": [], "wall_ms": []}
+                    )
+                    row["jobs"].append(q["median"]["jobs"])
+                    row["wall_ms"].append(round(q["median"]["wall_ms"], 1))
     return out
 
 
@@ -217,9 +270,10 @@ def main() -> None:
                 record["summary"] = summarize(record["pairs"], workloads)
                 with open(args.out, "w") as f:
                     json.dump(record, f, indent=1)
-        pair["warm_live_probe"] = {}
+        pair["warm_probe"] = {}
         for side in order:
-            pair["warm_live_probe"][side] = run_probe(sides[side], seed)
+            pair["warm_probe"][side] = run_probe(sides[side], seed)
+            record["probe_summary"] = summarize_probes(record["pairs"])
             with open(args.out, "w") as f:
                 json.dump(record, f, indent=1)
     print(json.dumps(record["summary"], indent=1))
